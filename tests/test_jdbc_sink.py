@@ -257,3 +257,53 @@ def test_jdbc_reimport_replaces_without_duplicates(spark, jdbc_dump, tmp_path):
     assert (
         table_row_probe(spark, url, "shop.people__tls_stg", props) is None
     )
+
+
+def test_jdbc_on_duplicate_winner_follows_source_order(spark, tmp_path):
+    """On the JDBC backend, `on-duplicate` picks its winner by source
+    order: replace keeps the LAST occurrence of a primary key, ignore the
+    FIRST. An integer PK used to drop the row id before the policy ran,
+    so the window ordered by a constant and the winner was arbitrary."""
+    from tidb_lightning_spark.config import Config
+    from tidb_lightning_spark.pipeline import Restorer
+
+    d = str(tmp_path / "dump")
+    _write(f"{d}/shop-schema-create.sql", "CREATE DATABASE IF NOT EXISTS shop;")
+    _write(
+        f"{d}/shop.dups-schema.sql",
+        "CREATE TABLE dups (id INT PRIMARY KEY, seq INT NOT NULL);",
+    )
+    # 2 files x 10 rounds over keys 1..10; seq numbers rows in source order
+    seq = 0
+    for part in range(2):
+        values = []
+        for _ in range(10):
+            for k in range(1, 11):
+                values.append(f"({k},{seq})")
+                seq += 1
+        _write(
+            f"{d}/shop.dups.{part:03d}.sql",
+            "INSERT INTO `dups` VALUES " + ",".join(values) + ";\n",
+        )
+    expected = {
+        "replace": {k: 189 + k for k in range(1, 11)},  # last: file 1, round 9
+        "ignore": {k: k - 1 for k in range(1, 11)},  # first: file 0, round 0
+    }
+    for policy, want in expected.items():
+        url = f"jdbc:derby:{tmp_path}/dup_{policy};create=true"
+        cfg = Config.from_toml(
+            None,
+            source_dir=d,
+            target_dir=str(tmp_path / f"state_{policy}"),
+            backend="jdbc",
+            jdbc_url=url,
+            jdbc_driver=DERBY_DRIVER,
+            on_duplicate=policy,
+        )
+        rep = Restorer(spark, cfg).run()
+        assert rep.ok, [t.error for t in rep.tables]
+        back = spark.read.jdbc(
+            url, "shop.dups", properties={"driver": DERBY_DRIVER}
+        )
+        got = {r["id"]: r["seq"] for r in back.collect()}
+        assert got == want, policy

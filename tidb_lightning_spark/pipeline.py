@@ -1,16 +1,32 @@
 """Restore orchestration (reference: lightning/restore/restore.go
-RestoreController.Run — the 7-step plan at restore.go:275-320, re-expressed
-as: discover -> per-table [read -> transform -> sink -> verify] -> report).
+RestoreController.Run, the 7-step plan at restore.go:275-320).
+
+`Restorer.run` discovers the dump and restores its tables smallest-first
+(loader.go:267-281). `Restorer.restore_table` runs one table through the
+same phases on every backend:
+
+    checkpoint skip -> view replay -> table info -> read+transform
+    -> duplicate policy -> strict gate -> deliver -> readback + verify
+    -> checkpoint statuses -> post-process -> report
+
+Only the delivery and its readback source depend on the backend
+(restore.go:206-243):
+
+* files: the sorted, staged `FilesSink.write_table` commit, or one
+  independently committed engine per file group when the table exceeds
+  `engine_bytes` (chunk-level resume, checkpoints.go:43-56); read back
+  from the committed files.
+* JDBC: rows land in a `<table>__tls_stg` staging table that swaps in
+  after verification (with crash recovery around the swap), or append
+  straight into a table this tool did not create; read back from the
+  target table.
 
 Driver-side control flow only; all data movement is lazy DataFrame work.
-Tables run smallest-first (loader.go:267-281). The per-table unit is
-atomic (staged sink commit), so checkpoint/resume is table-granular —
-Spark's task retry covers everything below that, replacing the
-reference's chunk/engine machinery (SURVEY.md §4).
 """
 
 from __future__ import annotations
 
+import functools
 import logging
 import os
 import re
@@ -144,11 +160,12 @@ def _readback_pass(
     cols: list[str],
     want_checksum: bool,
     want_stats: bool,
-) -> tuple[int, Checksum | None, dict | None]:
+    auto_max=None,
+) -> tuple[int, Checksum | None, dict | None, int | None]:
     """ONE readback scan serving every post-process consumer: row count,
-    the verification checksum triple (L2) and ANALYZE column stats (L3)
-    ride the same aggregate, so enabling checksum+analyze costs one pass,
-    not three."""
+    the verification checksum triple (L2), ANALYZE column stats (L3) and
+    the allocator rebase max (`auto_max`, a Column) ride the same
+    aggregate, so enabling checksum+analyze costs one pass, not three."""
     from pyspark.sql import functions as SF
 
     from tidb_lightning_spark.functions.checksum import canonical_row, row_hash64
@@ -158,6 +175,8 @@ def _readback_pass(
         canon = canonical_row(cols)
         aggs.append(SF.sum(SF.length(canon)).cast("bigint").alias("cks_bytes___"))
         aggs.append(SF.bit_xor(row_hash64(cols)).alias("cks_value___"))
+    if auto_max is not None:
+        aggs.append(auto_max.alias("auto_max___"))
     numeric_ish = ("int", "bigint", "smallint", "tinyint", "double", "float",
                    "decimal", "date", "timestamp")
     if want_stats:
@@ -172,6 +191,7 @@ def _readback_pass(
                 aggs.append(SF.max(name).alias(f"max__{name}"))
     row = df.agg(*aggs).collect()[0].asDict()
     rows = row.pop("rows___")
+    top = row.pop("auto_max___", None)
     cks = (
         Checksum(rows, row.pop("cks_bytes___") or 0, row.pop("cks_value___") or 0)
         if want_checksum
@@ -183,7 +203,41 @@ def _readback_pass(
         for k, v in row.items():
             stat, _, col = k.partition("__")
             stats.setdefault(col, {})[stat] = v
-    return rows, cks, stats
+    return rows, cks, stats, None if top is None else int(top)
+
+
+def _auto_id_column(info: TableInfo):
+    """The column whose target allocator is rebased after a JDBC load:
+    the AUTO_INCREMENT column, else the AUTO_RANDOM one, else None."""
+    return next((c for c in info.columns if c.auto_increment), None) or next(
+        (c for c in info.columns if c.auto_random_bits), None
+    )
+
+
+def _auto_max_agg(info: TableInfo):
+    """The readback aggregate behind the allocator rebase: the max id,
+    or for AUTO_RANDOM the max INCREMENTAL part. The composed
+    auto-random id carries hash shard bits in the top, so the raw max
+    would overshoot the allocator by ~2^shard_bits (the reference
+    rebases the allocator's rowid base, tidb.go:384-395
+    AlterAutoRandom)."""
+    c = _auto_id_column(info)
+    if c is None:
+        return None
+    col = F.col(c.name).cast("long")
+    if c.auto_random_bits:
+        col = col.bitwiseAND(F.lit((1 << (63 - c.auto_random_bits)) - 1))
+    return F.max(col)
+
+
+def _observed(obs) -> Checksum | None:
+    """The ingest checksum an observation accumulated during delivery."""
+    return None if obs is None else Checksum.from_row(obs.get)
+
+
+def _record(c: Checksum) -> dict:
+    """A checksum's persisted form (checkpoints, table meta, reports)."""
+    return {"kvs": c.kvs, "bytes": c.total_bytes, "value": c.value}
 
 
 def _task_fingerprint(cfg) -> dict:
@@ -348,6 +402,40 @@ class RunReport:
     @property
     def ok(self) -> bool:
         return all(t.status in ("imported", "skipped") for t in self.tables)
+
+
+@dataclass
+class _JDBCTarget:
+    """One table's place at the live JDBC target and how its rows get
+    there: into a staging table that swaps in after verification, or
+    appended straight into the live table."""
+
+    db: str
+    name: str
+    final_count: int | None = None  # live rows before the import; None = absent
+    use_swap: bool = True
+    auto_max: int | None = None  # allocator rebase base, from the readback
+
+    @property
+    def table(self) -> str:
+        return f"{self.db}.{self.name}"
+
+    @property
+    def staging_name(self) -> str:
+        return f"{self.name}__tls_stg"
+
+    @property
+    def staging(self) -> str:
+        return f"{self.db}.{self.staging_name}"
+
+    @property
+    def delivery_name(self) -> str:
+        """The table the rows are written into."""
+        return self.staging_name if self.use_swap else self.name
+
+    @property
+    def delivery(self) -> str:
+        return f"{self.db}.{self.delivery_name}"
 
 
 class Restorer:
@@ -559,372 +647,94 @@ class Restorer:
         return "imported"
 
     # ------------------------------------------------------------------
-    def restore_table(self, tbl: MDTableMeta) -> TableReport:
+    def _duplicate_policy(self, info: TableInfo) -> str | None:
+        """The PK-conflict policy this table's rows go through, or None.
+        The JDBC backend always resolves with `on-duplicate` (the
+        reference tidb backend's REPLACE / INSERT IGNORE semantics,
+        tidb.go:80-88); the files backend only when
+        `duplicate-resolution` asks for it."""
+        if not info.primary_key:
+            return None
         if self.jdbc_sink is not None:
-            return self._restore_table_jdbc(tbl)
+            return self.cfg.on_duplicate
+        if self.cfg.duplicate_resolution != "none":
+            return self.cfg.duplicate_resolution
+        return None
+
+    # ------------------------------------------------------------------
+    def restore_table(self, tbl: MDTableMeta) -> TableReport:
+        """Restore one table through the phases in the module docstring.
+        Each decision runs here once for both backends; `tgt` (the JDBC
+        target, None on the files backend) selects the delivery and the
+        post-process."""
         t0 = time.time()
         rep = TableReport(db=tbl.db, table=tbl.name, status="failed")
         sig = self.checkpoints.source_signature(tbl.data_files)
-        min_skip = self._min_skip_status()
         try:
             if self.checkpoints.should_skip(
-                tbl.db, tbl.name, sig, min_status=min_skip
+                tbl.db, tbl.name, sig, min_status=self._min_skip_status()
             ):
                 rep.status = "skipped"
                 return rep
-
+            tgt = None
+            if self.jdbc_sink is not None:
+                tgt = _JDBCTarget(
+                    f"{self.cfg.jdbc_table_prefix}{tbl.db}", tbl.name
+                )
+                # schema replay step 0: the database itself (restoreSchema,
+                # restore.go:553-602) — on mysql-family targets every probe
+                # below would otherwise fail with 'Unknown database' (1049)
+                self.jdbc_sink.ensure_database(self.spark, tgt.db)
             if tbl.view_schema_file:
-                return self._restore_view(tbl, sig, rep, t0)
-
-            info = self._table_info(tbl)
-            self.checkpoints.update(tbl.db, tbl.name, "loaded", signature=sig)
-
-            # engine planning (chunk-level resume): a table bigger than
-            # engine_bytes is split into deterministic file groups, each
-            # written+committed independently so a failed run resumes from
-            # the last finished engine (reference checkpoints.go:43-56,
-            # tests/checkpoint_chunks). Duplicate resolution and
-            # value-partitioned output need the whole table in one plan ->
-            # single-engine fallback.
-            engines = self._plan_engines(tbl.data_files)
-            part_cols = _partition_columns(info)
-            use_engines = (
-                len(engines) > 1
-                and self.cfg.duplicate_resolution == "none"
-                and part_cols is None
-            )
-            engine_plans: list[tuple[int, list, str, DataFrame, bool, int]] = []
-            if use_engines:
-                parts, base = [], 0
-                for k, efiles in enumerate(engines):
-                    esig = self.checkpoints.source_signature(efiles)
-                    done = self.checkpoints.engine_done(
-                        tbl.db, tbl.name, k, esig
-                    )
-                    c0 = len(self._table_caches)
-                    df_e, next_base = self._read_and_transform(
-                        tbl, info, files=efiles, rowid_base=base
-                    )
-                    self._engine_cache_slices[k] = (
-                        c0, len(self._table_caches)
-                    )
-                    engine_plans.append((k, efiles, esig, df_e, done, base))
-                    parts.append(df_e)
-                    base = next_base
-                df = parts[0]
-                for p in parts[1:]:
-                    df = df.unionByName(p, allowMissingColumns=True)
-            else:
-                df, _ = self._read_and_transform(tbl, info)
-            if df is None:
-                rep.status = "imported"  # schema-only table
-                self.checkpoints.update(tbl.db, tbl.name, "imported", signature=sig)
+                self._replay_view(tbl, tgt)
+                # a replayed view is fully done — no data to checksum or
+                # analyze — so it parks at the top status and every resume
+                # skips it
+                self.checkpoints.update(
+                    tbl.db, tbl.name, "analyzed", signature=sig, view=True
+                )
+                rep.status = "imported"
+                log.info("replayed view `%s`.`%s`", tbl.db, tbl.name)
                 return rep
 
-            if self.cfg.duplicate_resolution != "none" and info.primary_key:
-                from tidb_lightning_spark.operators.transform import ROWID_COL
-                from tidb_lightning_spark.sinks.jdbc_sink import (
-                    apply_duplicate_policy,
+            info = self._table_info(tbl)
+            column_stats = None
+            if tgt is None or not self._prepare_jdbc_target(tbl, tgt, sig, rep):
+                # a new attempt consumes any pre-swap marker of an old one
+                self.checkpoints.update(
+                    tbl.db, tbl.name, "loaded", signature=sig, staged=None
                 )
-
-                # PK-conflict resolution before the sort-write (the local
-                # backend's same-key-overwrites semantics made explicit;
-                # tidb.go:80-88 policy names). Row id orders first/last.
-                df = apply_duplicate_policy(
-                    df,
-                    info.primary_key,
-                    self.cfg.duplicate_resolution,
-                    order_col=ROWID_COL,
+                df, engine_plans = self._plan_reads(tbl, info, tgt)
+                if df is None:  # schema-only table: DDL replay was the work
+                    if tgt is not None:
+                        self.jdbc_sink.ensure_table(self.spark, info, tgt.table)
+                    self.checkpoints.update(
+                        tbl.db, tbl.name, "imported", signature=sig
+                    )
+                    rep.status = "imported"
+                    return rep
+                column_stats = self._load(
+                    tbl, info, tgt, sig, rep, df, engine_plans
                 )
-                if ROWID_COL in df.columns and not info.has_auto_row_id():
-                    df = df.drop(ROWID_COL)
-
-            err_obs = None
-            if self.cfg.strict_sql_mode and ERR_COL in df.columns:
-                if use_engines:
-                    # engine mode: probe up front (one extra action) —
-                    # per-engine staging makes a post-write abort messier
-                    bad = df.filter(F.col(ERR_COL).isNotNull())
-                    sample = bad.select(ERR_COL).limit(3).collect()
-                    if sample:
-                        raise IngestError(
-                            f"strict sql_mode violations in "
-                            f"`{tbl.db}`.`{tbl.name}`: "
-                            f"columns {[r[0] for r in sample]}"
-                        )
-                else:
-                    # fold the violation check into the WRITE job: observe
-                    # the error count below the ERR-column drop, verify it
-                    # before the staged commit (sink pre_commit) — strict
-                    # mode no longer costs a second source scan. The range
-                    # sampler may double-fire this metric; only ==0 is
-                    # checked, and 2x0 == 0.
-                    from pyspark.sql import Observation
-
-                    err_obs = Observation()
-                    df = df.observe(
-                        err_obs,
-                        F.sum(F.col(ERR_COL).isNotNull().cast("long")).alias(
-                            "n_err"
-                        ),
-                        F.first(ERR_COL, ignorenulls=True).alias("sample"),
-                    )
-                df = df.drop(ERR_COL)
-            elif ERR_COL in df.columns:
-                df = df.drop(ERR_COL)
-
-            def strict_gate():
-                if err_obs is None:
-                    return
-                got = err_obs.get
-                if got["n_err"]:
-                    raise IngestError(
-                        f"strict sql_mode violations in "
-                        f"`{tbl.db}`.`{tbl.name}`: {got['n_err']} rows "
-                        f"(e.g. column {got['sample']!r})"
-                    )
-
-            # ingest-side checksum accumulated DURING the write job via
-            # df.observe() — the reference's accumulate-while-delivering
-            # (restore.go:2325-2332) with zero extra source scans. The
-            # aggregate columns must match the readback pass: df's columns
-            # in df order (readback reads with df.schema).
-            from tidb_lightning_spark.functions.checksum import checksum_aggs
-
-            want_cks = self.cfg.checksum != "off"
-            ingest_cks = None
-            cks_cols = list(df.columns)
-
-            def new_obs():
-                from pyspark.sql import Observation
-
-                return (
-                    (Observation(), checksum_aggs(cks_cols))
-                    if want_cks
-                    else (None, None)
-                )
-
-            sort_cols = info.primary_key or None
-            if use_engines:
-                # pre-clean: keep only files of engines that are DONE under
-                # the current plan; everything else (partial writes, output
-                # from a previous non-engine import, engines of an older
-                # grouping) is stale and re-imported — the analog of
-                # checkpoint-error-destroy for dangling engines.
-                final = self.sink.table_path(tbl.db, tbl.name)
-                if os.path.isdir(final):
-                    keep = {
-                        f"engine{k:04d}-"
-                        for k, _, _, _, done, _ in engine_plans
-                        if done
-                    }
-                    for fname in os.listdir(final):
-                        if fname.endswith((".parquet", ".orc")) and not any(
-                            fname.startswith(p) for p in keep
-                        ):
-                            os.remove(os.path.join(final, fname))
-                engine_cks: list[Checksum] | None = [] if want_cks else None
-                for k, efiles, esig, df_e, done, ebase in engine_plans:
-                    self.pauser.wait_if_paused()
-                    if done:
-                        # chunk-level resume: engine already in place; its
-                        # ingest checksum was recorded at engine commit
-                        if want_cks:
-                            stored = (
-                                self.checkpoints.get(tbl.db, tbl.name)
-                                .get("engines", {})
-                                .get(str(k), {})
-                                .get("checksum")
-                            )
-                            if stored is None:
-                                engine_cks = None  # fall back to recompute
-                            elif engine_cks is not None:
-                                engine_cks.append(
-                                    Checksum(
-                                        stored["kvs"],
-                                        stored["bytes"],
-                                        stored["value"],
-                                    )
-                                )
-                        continue
-                    df_w = (
-                        df_e.drop(ERR_COL) if ERR_COL in df_e.columns else df_e
-                    )
-                    ebytes = sum(f.file_size for f in efiles)
-                    obs, aggs = new_obs()
-                    self.sink.write_engine(
-                        df_w, tbl.db, tbl.name, k,
-                        sort_columns=sort_cols, source_bytes=ebytes,
-                        observation=obs, observe_aggs=aggs,
-                        manifest={
-                            "signature": esig, "rowid_base": ebase,
-                            "bytes": ebytes,
-                            "files": [f.path for f in efiles],
-                        },
-                    )
-                    ecks_field = {}
-                    if want_cks:
-                        got = obs.get
-                        ecks = Checksum(
-                            got["kvs"], got["total_bytes"] or 0,
-                            got["checksum"] or 0,
-                        )
-                        if engine_cks is not None:
-                            engine_cks.append(ecks)
-                        ecks_field = {
-                            "checksum": {
-                                "kvs": ecks.kvs,
-                                "bytes": ecks.total_bytes,
-                                "value": ecks.value,
-                            }
-                        }
-                    self.checkpoints.engine_update(
-                        tbl.db, tbl.name, k, "imported",
-                        signature=esig, rowid_base=ebase, bytes=ebytes,
-                        files=[f.path for f in efiles], **ecks_field,
-                    )
-                    # bounded working set: any SQL-dump cache this
-                    # engine materialized is dead once the engine
-                    # commits (unpersist is idempotent; the finally
-                    # sweep covers error paths)
-                    lo, hi = self._engine_cache_slices.get(k, (0, 0))
-                    for cached in self._table_caches[lo:hi]:
-                        try:
-                            cached.unpersist()
-                        except Exception:
-                            pass
-                if want_cks and engine_cks is not None:
-                    ingest_cks = Checksum()
-                    for c in engine_cks:
-                        ingest_cks = ingest_cks.add(c)
-                from tidb_lightning_spark.sinks.files_sink import CommitResult
-
-                final = self.sink.table_path(tbl.db, tbl.name)
-                commit = CommitResult(
-                    final,
-                    sum(
-                        1
-                        for f in os.listdir(final)
-                        if f.endswith((".parquet", ".orc"))
-                    ),
-                    None,
-                    0.0,
-                )
-            else:
-                obs, aggs = new_obs()
-                commit = self.sink.write_table(
-                    df,
-                    tbl.db,
-                    tbl.name,
-                    sort_columns=sort_cols,
-                    source_bytes=tbl.total_size,
-                    partition_columns=part_cols,
-                    observation=obs,
-                    observe_aggs=aggs,
-                    pre_commit=strict_gate,
-                )
-                if want_cks:
-                    got = obs.get
-                    ingest_cks = Checksum(
-                        got["kvs"], got["total_bytes"] or 0, got["checksum"] or 0
-                    )
-                self.checkpoints.clear_engines(tbl.db, tbl.name)
-            self.checkpoints.update(tbl.db, tbl.name, "imported", signature=sig)
-
-            # read back with the EXACT schema we wrote: directory-name
-            # partition-type inference would otherwise re-type partition
-            # columns (e.g. CHAR '00123' -> int 123), and the readback
-            # checksum would canonicalize the re-typed value while the
-            # ingest side used the original — a false verification failure
-            # on correctly-loaded data.
-            written = (
-                self.spark.read.schema(df.schema)
-                .format(self.cfg.output_format)
-                .load(commit.path)
+            self.checkpoints.update(
+                tbl.db, tbl.name, "imported", signature=sig, staged=None
             )
-            cols = [c for c in written.columns]
-            rep.files = commit.n_files
-            want_stats = self.cfg.analyze != "off"
-            if not (want_cks or want_stats):
-                # footer-metadata count only — no data scan
-                rep.rows = written.count()
-                column_stats = None
-            else:
-                rep.rows, readback, column_stats = _readback_pass(
-                    written, cols, want_cks, want_stats
-                )
-            if want_cks:
-                if ingest_cks is None:
-                    # no observed value available (resumed engines imported
-                    # under checksum=off): one full recompute of the ingest
-                    # side from source
-                    ingest_cks = Checksum.from_row(
-                        checksum(df.select(*cols), cols).collect()[0]
-                    )
-                if ingest_cks != readback:
-                    # disambiguate a real data mismatch from an observation
-                    # anomaly (stage retries can re-fire metrics): recompute
-                    # the ingest side from source once before deciding
-                    recomputed = Checksum.from_row(
-                        checksum(df.select(*cols), cols).collect()[0]
-                    )
-                    if recomputed != ingest_cks:
-                        log.warning(
-                            "observed ingest checksum %s != recomputed %s "
-                            "(speculative/retried tasks?); using recomputed",
-                            ingest_cks, recomputed,
-                        )
-                    ingest_cks = recomputed
-                if ingest_cks != readback:
-                    msg = (
-                        f"checksum mismatch `{tbl.db}`.`{tbl.name}`: "
-                        f"ingest {ingest_cks} != readback {readback}"
-                    )
-                    if self.cfg.checksum == "required":
-                        # downgrade below `imported` so resume re-runs the
-                        # table instead of skipping a failed verification
-                        self.checkpoints.update(
-                            tbl.db, tbl.name, "closed", signature=sig
-                        )
-                        raise IngestError(msg)
-                    log.warning(msg)
-                rep.checksum = {
-                    "kvs": readback.kvs,
-                    "bytes": readback.total_bytes,
-                    "value": readback.value,
-                }
+            if rep.checksum is not None:
                 self.checkpoints.update(
                     tbl.db, tbl.name, "checksummed",
                     signature=sig, checksum=rep.checksum,
                 )
+
             if rep.rows == 0 and tbl.total_size > 0:
                 log.warning(
                     "table `%s`.`%s` imported 0 rows from %d bytes of source "
                     "— check charset/dialect/compression configuration",
                     tbl.db, tbl.name, tbl.total_size,
                 )
-            meta = {
-                "schema": [c.name for c in info.columns],
-                "primary_key": info.primary_key,
-                "rows": rep.rows,
-                "checksum": rep.checksum,
-                "pinned_timestamp": self.pinned_ts,
-            }
-            if info.partition_by:
-                # the SHOW TABLE STATUS 'Create_options: partitioned'
-                # analog (tests/partitioned-table): HASH/KEY partitioning
-                # is physical-only here (the range sink spreads rows),
-                # but the declared clause stays visible in the catalog
-                meta["partition_by"] = info.partition_by
-            # ANALYZE (L3): per-column stats into the table meta; feeds size
-            # estimation the way ANALYZE TABLE feeds the optimizer
-            # (restore.go:2215-2220)
-            if column_stats is not None:
-                meta["column_stats"] = column_stats
-                self.checkpoints.update(
-                    tbl.db, tbl.name, "analyzed", signature=sig
-                )
-            self.sink.write_meta(tbl.db, tbl.name, meta)
+            if tgt is None:
+                self._write_table_meta(tbl, info, sig, rep, column_stats)
+            else:
+                self._rebase_and_analyze(tbl, info, tgt, sig)
             rep.status = "imported"
             metrics.TABLES.inc(
                 metrics.TABLE_STATE_COMPLETED, metrics.TABLE_RESULT_SUCCESS
@@ -932,13 +742,13 @@ class Restorer:
             metrics.CHUNKS.inc(metrics.CHUNK_STATE_FINISHED, by=rep.files)
             metrics.BYTES.inc(metrics.BYTE_STATE_FINISHED, by=tbl.total_size)
             # progress line mirroring restore.go:960-969 fields
+            elapsed = max(time.time() - t0, 0.001)
             log.info(
-                "restored `%s`.`%s`: %d rows, %d files, %.1f MiB source in "
+                "restored `%s`.`%s`%s: %d rows, %d files, %.1f MiB source in "
                 "%.1fs (%.1f rows/s, %.2f MiB/s)",
-                tbl.db, tbl.name, rep.rows, rep.files,
-                tbl.total_size / 1048576, time.time() - t0,
-                rep.rows / max(time.time() - t0, 0.001),
-                tbl.total_size / 1048576 / max(time.time() - t0, 0.001),
+                tbl.db, tbl.name, "" if tgt is None else " -> jdbc",
+                rep.rows, rep.files, tbl.total_size / 1048576, elapsed,
+                rep.rows / elapsed, tbl.total_size / 1048576 / elapsed,
             )
         except Exception as exc:  # error summary (restore.go:89-129)
             rep.error = f"{type(exc).__name__}: {exc}"
@@ -959,37 +769,493 @@ class Restorer:
         return rep
 
     # ------------------------------------------------------------------
-    def _restore_view(self, tbl, sig: str, rep: TableReport, t0: float) -> TableReport:
+    def _plan_reads(
+        self, tbl: MDTableMeta, info: TableInfo, tgt: _JDBCTarget | None
+    ) -> tuple[DataFrame | None, list]:
+        """The table's lazy read+transform plan, plus its engine plans.
+
+        Engine planning (chunk-level resume): a files-backend table bigger
+        than engine_bytes is split into deterministic file groups, each
+        written+committed independently so a failed run resumes from the
+        last finished engine (reference checkpoints.go:43-56,
+        tests/checkpoint_chunks). A duplicate policy and value-partitioned
+        output need the whole table in one plan, and the JDBC backend
+        delivers a table as one unit -> no engine plans."""
+        engines = self._plan_engines(tbl.data_files) if tgt is None else []
+        if (
+            len(engines) < 2
+            or self._duplicate_policy(info) is not None
+            or _partition_columns(info) is not None
+        ):
+            df, _ = self._read_and_transform(tbl, info)
+            return df, []
+        plans, base = [], 0
+        for k, efiles in enumerate(engines):
+            esig = self.checkpoints.source_signature(efiles)
+            done = self.checkpoints.engine_done(tbl.db, tbl.name, k, esig)
+            c0 = len(self._table_caches)
+            df_e, next_base = self._read_and_transform(
+                tbl, info, files=efiles, rowid_base=base
+            )
+            self._engine_cache_slices[k] = (c0, len(self._table_caches))
+            plans.append((k, efiles, esig, df_e, done, base))
+            base = next_base
+        df = plans[0][3]
+        for p in plans[1:]:
+            df = df.unionByName(p[3], allowMissingColumns=True)
+        return df, plans
+
+    # ------------------------------------------------------------------
+    def _load(
+        self,
+        tbl: MDTableMeta,
+        info: TableInfo,
+        tgt: _JDBCTarget | None,
+        sig: str,
+        rep: TableReport,
+        df: DataFrame,
+        engine_plans: list,
+    ) -> dict | None:
+        """Duplicate policy -> strict gate -> deliver -> readback + verify
+        (-> swap, for a staged JDBC delivery) for one table's rows. Fills
+        rep.rows, rep.files and rep.checksum; returns the ANALYZE column
+        stats of a files readback (None when analyze is off or the target
+        is JDBC, which analyzes at the target)."""
+        from pyspark.sql import Observation
+
+        from tidb_lightning_spark.functions.checksum import checksum_aggs
+        from tidb_lightning_spark.operators.transform import ROWID_COL
+        from tidb_lightning_spark.sinks.jdbc_sink import apply_duplicate_policy
+
+        policy = self._duplicate_policy(info)
+        if policy is not None:
+            # PK-conflict resolution before delivery (tidb.go:80-88 policy
+            # names) and before the checksum observation, so the ingest
+            # checksum covers exactly the delivered rows. The row id orders
+            # first/last.
+            df = apply_duplicate_policy(
+                df, info.primary_key, policy, order_col=ROWID_COL
+            )
+        if ROWID_COL in df.columns and (
+            tgt is not None or not info.has_auto_row_id()
+        ):
+            # only the files backend stores the row id (as the hidden handle)
+            df = df.drop(ROWID_COL)
+
+        def strict_check(got):
+            if got["n_err"]:
+                raise IngestError(
+                    f"strict sql_mode violations in "
+                    f"`{tbl.db}`.`{tbl.name}`: {got['n_err']} rows "
+                    f"(e.g. column {got['sample']!r})"
+                )
+
+        strict_gate = None
+        if ERR_COL in df.columns:
+            if self.cfg.strict_sql_mode:
+                err_aggs = (
+                    F.sum(F.col(ERR_COL).isNotNull().cast("long")).alias("n_err"),
+                    F.first(ERR_COL, ignorenulls=True).alias("sample"),
+                )
+                if engine_plans or tgt is not None:
+                    # engine and JDBC deliveries have no single commit to
+                    # gate (per-engine commits, a direct append): check up
+                    # front, one extra action
+                    strict_check(df.agg(*err_aggs).first())
+                else:
+                    # fold the check into the WRITE job: observe the error
+                    # count below the ERR-column drop, verify it before the
+                    # staged commit (sink pre_commit) — no second source
+                    # scan. The range sampler may double-fire this metric;
+                    # only ==0 is checked, and 2x0 == 0.
+                    err_obs = Observation()
+                    df = df.observe(err_obs, *err_aggs)
+                    strict_gate = lambda: strict_check(err_obs.get)  # noqa: E731
+            df = df.drop(ERR_COL)
+
+        # ingest-side checksum accumulated DURING delivery via
+        # df.observe() — the reference's accumulate-while-delivering
+        # (restore.go:2325-2332) with zero extra source scans. The
+        # aggregate columns must match the readback pass: df's columns in
+        # df order.
+        want_cks = self.cfg.checksum != "off"
+        cols = list(df.columns)
+
+        def new_obs():
+            if not want_cks:
+                return None, None
+            return Observation(), checksum_aggs(cols)
+
+        if tgt is not None:
+            if tgt.use_swap:
+                self.jdbc_sink.drop_table(self.spark, tgt.staging)
+            self.jdbc_sink.ensure_table(self.spark, info, tgt.delivery)
+            obs, aggs = new_obs()
+            self.jdbc_sink.write_table(
+                df if obs is None else df.observe(obs, *aggs),
+                tgt.db, tgt.delivery_name, pk=None,
+            )
+            ingest_cks = _observed(obs)
+            # remote checksum (I2/L2): read the WRITTEN table back over
+            # JDBC — the ADMIN CHECKSUM analog (checksum.go:104-147). In
+            # the staged flow this verifies the staging table BEFORE the
+            # swap, so the live table never sees unverified data.
+            written = self._jdbc_readback_df(tgt.delivery, info).select(*cols)
+        else:
+            if engine_plans:
+                rep.files, ingest_cks = self._write_engines(
+                    tbl, engine_plans, info.primary_key or None, new_obs
+                )
+            else:
+                obs, aggs = new_obs()
+                commit = self.sink.write_table(
+                    df,
+                    tbl.db,
+                    tbl.name,
+                    sort_columns=info.primary_key or None,
+                    source_bytes=tbl.total_size,
+                    partition_columns=_partition_columns(info),
+                    observation=obs,
+                    observe_aggs=aggs,
+                    pre_commit=strict_gate,
+                )
+                rep.files = commit.n_files
+                ingest_cks = _observed(obs)
+                self.checkpoints.clear_engines(tbl.db, tbl.name)
+            # read back with the EXACT schema we wrote: directory-name
+            # partition-type inference would otherwise re-type partition
+            # columns (e.g. CHAR '00123' -> int 123), and the readback
+            # checksum would canonicalize the re-typed value while the
+            # ingest side used the original — a false verification failure
+            # on correctly-loaded data.
+            written = (
+                self.spark.read.schema(df.schema)
+                .format(self.cfg.output_format)
+                .load(self.sink.table_path(tbl.db, tbl.name))
+            )
+
+        rows, readback, column_stats, auto_max = _readback_pass(
+            written, cols, want_cks,
+            want_stats=tgt is None and self.cfg.analyze != "off",
+            auto_max=None if tgt is None else _auto_max_agg(info),
+        )
+        # a direct append reads back the WHOLE final table — the
+        # reference's post-restore ADMIN CHECKSUM semantics
+        # (checksum.go:104-147, tests/error_summary): a target that already
+        # held rows before the import MUST fail verification, because the
+        # table no longer equals what was imported
+        appended = tgt is not None and not tgt.use_swap
+        rep.rows = rows - ((tgt.final_count or 0) if appended else 0)
+        if want_cks:
+            if ingest_cks != readback:
+                # recompute the ingest side from source once before
+                # deciding: there is no observed value (resumed engines
+                # imported under checksum=off), or the mismatch may be an
+                # observation anomaly (stage retries can re-fire metrics)
+                # rather than a real data mismatch
+                recomputed = Checksum.from_row(
+                    checksum(df.select(*cols), cols).collect()[0]
+                )
+                if ingest_cks is not None and recomputed != ingest_cks:
+                    log.warning(
+                        "observed ingest checksum %s != recomputed %s "
+                        "(speculative/retried tasks?); using recomputed",
+                        ingest_cks, recomputed,
+                    )
+                ingest_cks = recomputed
+            if ingest_cks != readback:
+                msg = (
+                    f"checksum mismatch `{tbl.db}`.`{tbl.name}`: "
+                    f"ingest {ingest_cks} != readback {readback}"
+                )
+                if appended:
+                    msg += (
+                        f" (table pre-populated with {tgt.final_count or 0} "
+                        f"rows before the import)"
+                    )
+                if self.cfg.checksum == "required":
+                    if tgt is not None and tgt.use_swap:
+                        # pre-commit gate: bad staging never swaps in
+                        self.jdbc_sink.drop_table(self.spark, tgt.staging)
+                    # downgrade below `imported` so resume re-runs the
+                    # table instead of skipping a failed verification
+                    self.checkpoints.update(
+                        tbl.db, tbl.name, "closed", signature=sig
+                    )
+                    raise IngestError(msg)
+                log.warning(msg)
+            rep.checksum = _record(readback)
+
+        if tgt is not None:
+            tgt.auto_max = auto_max
+        if tgt is not None and tgt.use_swap:
+            # Import step: the verified staging table swaps into place.
+            # The pre-swap marker persists the verified staging contents
+            # BEFORE the non-atomic DROP+RENAME, so a crash anywhere in
+            # the commit window is recognized on resume
+            # (_prepare_jdbc_target) instead of routing into the append
+            # path and duplicating the table.
+            self.checkpoints.update(
+                tbl.db, tbl.name, "closed", signature=sig,
+                staged={
+                    "rows": rep.rows,
+                    "checksum": rep.checksum,
+                    "auto_max": auto_max,
+                },
+            )
+            self.jdbc_sink.drop_table(self.spark, tgt.table)
+            self.jdbc_sink.rename_table(
+                self.spark, tgt.db, tgt.staging_name, tgt.name
+            )
+        return column_stats
+
+    # ------------------------------------------------------------------
+    def _write_engines(
+        self, tbl: MDTableMeta, engine_plans: list, sort_cols, new_obs
+    ) -> tuple[int, Checksum | None]:
+        """Engine delivery (files backend): each file group is written and
+        committed on its own (reference engine Open -> Write -> Close ->
+        Import, backend.go:300-439). Returns the table's file count and
+        the summed ingest checksum — None when a resumed engine recorded
+        none, so the verify step recomputes it from source."""
+        # pre-clean: keep only files of engines that are DONE under the
+        # current plan; everything else (partial writes, output from a
+        # previous non-engine import, engines of an older grouping) is
+        # stale and re-imported — the analog of
+        # checkpoint-error-destroy for dangling engines.
+        final = self.sink.table_path(tbl.db, tbl.name)
+        if os.path.isdir(final):
+            keep = {f"engine{k:04d}-" for k, _, _, _, done, _ in engine_plans if done}
+            for fname in os.listdir(final):
+                if fname.endswith((".parquet", ".orc")) and not any(
+                    fname.startswith(p) for p in keep
+                ):
+                    os.remove(os.path.join(final, fname))
+        want_cks = self.cfg.checksum != "off"
+        engine_cks: list[Checksum] | None = [] if want_cks else None
+        for k, efiles, esig, df_e, done, ebase in engine_plans:
+            self.pauser.wait_if_paused()
+            if done:
+                # chunk-level resume: engine already in place; its ingest
+                # checksum was recorded at engine commit
+                if want_cks:
+                    stored = (
+                        self.checkpoints.get(tbl.db, tbl.name)
+                        .get("engines", {})
+                        .get(str(k), {})
+                        .get("checksum")
+                    )
+                    if stored is None:
+                        engine_cks = None  # fall back to recompute
+                    elif engine_cks is not None:
+                        engine_cks.append(
+                            Checksum(stored["kvs"], stored["bytes"], stored["value"])
+                        )
+                continue
+            df_w = df_e.drop(ERR_COL) if ERR_COL in df_e.columns else df_e
+            ebytes = sum(f.file_size for f in efiles)
+            obs, aggs = new_obs()
+            self.sink.write_engine(
+                df_w, tbl.db, tbl.name, k,
+                sort_columns=sort_cols, source_bytes=ebytes,
+                observation=obs, observe_aggs=aggs,
+                manifest={
+                    "signature": esig, "rowid_base": ebase,
+                    "bytes": ebytes,
+                    "files": [f.path for f in efiles],
+                },
+            )
+            ecks = _observed(obs)
+            ecks_field = {}
+            if ecks is not None:
+                if engine_cks is not None:
+                    engine_cks.append(ecks)
+                ecks_field = {"checksum": _record(ecks)}
+            self.checkpoints.engine_update(
+                tbl.db, tbl.name, k, "imported",
+                signature=esig, rowid_base=ebase, bytes=ebytes,
+                files=[f.path for f in efiles], **ecks_field,
+            )
+            # bounded working set: any SQL-dump cache this engine
+            # materialized is dead once the engine commits (unpersist is
+            # idempotent; the finally sweep covers error paths)
+            lo, hi = self._engine_cache_slices.get(k, (0, 0))
+            for cached in self._table_caches[lo:hi]:
+                try:
+                    cached.unpersist()
+                except Exception:
+                    pass
+        n_files = sum(
+            1 for f in os.listdir(final) if f.endswith((".parquet", ".orc"))
+        )
+        if engine_cks is None:
+            return n_files, None
+        return n_files, functools.reduce(Checksum.add, engine_cks, Checksum())
+
+    # ------------------------------------------------------------------
+    def _prepare_jdbc_target(
+        self, tbl: MDTableMeta, tgt: _JDBCTarget, sig: str, rep: TableReport
+    ) -> bool:
+        """Crash recovery at the live target, then the staging decision.
+        Returns True when a pre-swap marker shows that an earlier run's
+        swap completed: rep and tgt then hold what the verified staging
+        table held, and only the bookkeeping is left."""
+        from tidb_lightning_spark.checkpoints import STATUS
+        from tidb_lightning_spark.sinks.jdbc_sink import table_row_probe
+
+        def probe(dbtable):
+            return table_row_probe(
+                self.spark, self.cfg.jdbc_url, dbtable, self.jdbc_sink.properties
+            )
+
+        # crash-window recovery: a kill between the swap's DROP and RENAME
+        # leaves the final table missing but the staging table present
+        # (the checkpoint is < imported there, so this always runs before
+        # any skip) — finish the rename so readers have a table again. The
+        # recovered table is OURS (possibly a partial staging from a
+        # mid-write crash), so the re-import MUST take the swap path, never
+        # append onto it.
+        recovered = False
+        tgt.final_count = probe(tgt.table)
+        if tgt.final_count is None and probe(tgt.staging) is not None:
+            self.jdbc_sink.rename_table(
+                self.spark, tgt.db, tgt.staging_name, tgt.name
+            )
+            tgt.final_count = probe(tgt.table)
+            recovered = True
+
+        prior = self.checkpoints.get(tbl.db, tbl.name)
+        prior_status = prior.get("status", 0)
+        # pre-swap marker left by a crash inside the commit window: it
+        # records what the VERIFIED staging table held just before the
+        # DROP+RENAME. Its presence means the final table (if any) is ours
+        # — either the old import (crash before DROP) or the swapped-in
+        # staging (crash after RENAME but before the 'imported' checkpoint
+        # write). Never append onto it.
+        staged = prior.get("staged")
+        if (
+            staged is not None
+            and prior_status < STATUS["imported"]
+            and prior.get("signature") == sig
+            and tgt.final_count is not None
+            and tgt.final_count == staged.get("rows")
+        ):
+            # The swap completed (the live table matches the verified
+            # staging contents) — the crash only lost the checkpoint
+            # write. Finish the bookkeeping instead of re-importing (or
+            # worse, appending a duplicate copy of every row).
+            rep.rows = staged["rows"]
+            if staged.get("checksum") is not None:
+                rep.checksum = dict(staged["checksum"])
+            tgt.auto_max = staged.get("auto_max")
+            log.info(
+                "resumed `%s`.`%s`: swap had completed before the crash "
+                "(staged marker matches the live table) — bookkeeping "
+                "finished without re-import",
+                tbl.db, tbl.name,
+            )
+            return True
+
+        # staged commit (engine Close -> Import, backend.go:300-439,
+        # carried over to JDBC): when the target is empty/absent — or was
+        # loaded by a previous run of ours, so a re-import REPLACES like
+        # the files backend — rows land in a staging table, are
+        # checksum-verified there, and only then swap in. Retries and
+        # resumes can never duplicate rows, and a failed verification
+        # never touches the live table. Only a table pre-populated outside
+        # this tool is appended to directly (reference tidb-backend
+        # semantics; a mid-write crash there can leave partial rows —
+        # documented parity). A pre-swap marker (even from a changed
+        # source, or with a final count that no longer matches) still
+        # proves the final table was written by US mid-commit.
+        #
+        # No-schema: the table object is the USER's (the model was fetched
+        # from the target) — deliver INTO it like the reference's tidb
+        # backend, never drop-and-swap a table we did not define (the
+        # staging copy would be rebuilt from the fetched model and lose
+        # target-side constraints/indexes beyond it).
+        tgt.use_swap = tbl.schema_file is not None and (
+            recovered
+            or not tgt.final_count
+            or prior_status >= STATUS["imported"]
+            or staged is not None
+        )
+        return False
+
+    # ------------------------------------------------------------------
+    def _replay_view(self, tbl: MDTableMeta, tgt: _JDBCTarget | None) -> None:
         """Replay a `-schema-view.sql` definition (reference: discovered
         loader.go:39-46, executed restore.go:553-602, e2e tests/view/).
         The files backend records the parsed definition in the warehouse
-        catalog (`_views.json`), which `cli sql` registers after tables;
-        there is no data to verify, so the view goes straight to the
-        resume-skippable status."""
+        catalog (`_views.json`), which `cli sql` registers after tables.
+        A MySQL-family JDBC target runs CREATE OR REPLACE VIEW with the
+        original body; other dialects would need a SQL translation — the
+        definition is recorded as not replayed."""
         from tidb_lightning_spark.schema.ddl import parse_create_view
+        from tidb_lightning_spark.sinks.jdbc_sink import execute_ddl
 
-        with csv_source._decompress_open(
-            tbl.view_schema_file, self.spark
-        ) as f:
+        with csv_source._decompress_open(tbl.view_schema_file, self.spark) as f:
             view = parse_create_view(
                 csv_source.decode_file_bytes(
                     f.read(), self.cfg.character_set, tbl.view_schema_file
                 )
             )
-        self.sink.write_view_meta(
-            tbl.db, tbl.name,
-            {"columns": view.columns, "select": view.select,
-             "source_file": tbl.view_schema_file},
-        )
-        # a replayed view is fully done — no data to checksum or analyze —
-        # so it parks at the top status and every resume skips it
-        self.checkpoints.update(
-            tbl.db, tbl.name, "analyzed", signature=sig, view=True
-        )
-        rep.status = "imported"
-        rep.seconds = time.time() - t0
-        log.info("replayed view `%s`.`%s`", tbl.db, tbl.name)
-        return rep
+        if tgt is None:
+            self.sink.write_view_meta(
+                tbl.db, tbl.name,
+                {"columns": view.columns, "select": view.select,
+                 "source_file": tbl.view_schema_file},
+            )
+        elif self.jdbc_sink.dialect == "mysql":
+            cols = (
+                "(" + ", ".join(f"`{c}`" for c in view.columns) + ")"
+                if view.columns
+                else ""
+            )
+            execute_ddl(
+                self.spark, self.cfg.jdbc_url,
+                f"CREATE OR REPLACE VIEW {tgt.table} {cols} AS {view.select}",
+                self.jdbc_sink.properties,
+            )
+        else:
+            log.warning(
+                "view `%s`.`%s`: no SQL translation for dialect %s — "
+                "definition not replayed",
+                tbl.db, tbl.name, self.jdbc_sink.dialect,
+            )
+
+    # ------------------------------------------------------------------
+    def _write_table_meta(
+        self,
+        tbl: MDTableMeta,
+        info: TableInfo,
+        sig: str,
+        rep: TableReport,
+        column_stats: dict | None,
+    ) -> None:
+        """Post-import finishing on the files backend: the table's catalog
+        entry (`_tls_meta.json`), with ANALYZE column stats (L3) when the
+        readback computed them."""
+        meta = {
+            "schema": [c.name for c in info.columns],
+            "primary_key": info.primary_key,
+            "rows": rep.rows,
+            "checksum": rep.checksum,
+            "pinned_timestamp": self.pinned_ts,
+        }
+        if info.partition_by:
+            # the SHOW TABLE STATUS 'Create_options: partitioned' analog
+            # (tests/partitioned-table): HASH/KEY partitioning is
+            # physical-only here (the range sink spreads rows), but the
+            # declared clause stays visible in the catalog
+            meta["partition_by"] = info.partition_by
+        # ANALYZE (L3): per-column stats into the table meta; feeds size
+        # estimation the way ANALYZE TABLE feeds the optimizer
+        # (restore.go:2215-2220)
+        if column_stats is not None:
+            meta["column_stats"] = column_stats
+            self.checkpoints.update(tbl.db, tbl.name, "analyzed", signature=sig)
+        self.sink.write_meta(tbl.db, tbl.name, meta)
 
     # ------------------------------------------------------------------
     def _jdbc_readback_df(self, dbtable: str, info: TableInfo) -> DataFrame:
@@ -997,24 +1263,15 @@ class Restorer:
         auto-increment column when one exists (MIN/MAX bounds from a
         one-row probe); plain single-connection read otherwise (small
         dimension tables, string keys)."""
-        from pyspark.sql import types as T
-
         from tidb_lightning_spark.sinks.jdbc_sink import query_min_max
 
         props = self.jdbc_sink.properties
-        part_col = None
-        if len(info.primary_key) == 1:
-            c = info.column(info.primary_key[0])
-            if isinstance(
-                c.mysql.spark_type(),
-                (T.ByteType, T.ShortType, T.IntegerType, T.LongType),
-            ):
-                part_col = c.name
-        if part_col is None:
-            for c in info.columns:
-                if c.auto_increment:
-                    part_col = c.name
-                    break
+        if not info.has_auto_row_id():  # a single integer PK
+            part_col = info.column(info.primary_key[0]).name
+        else:
+            part_col = next(
+                (c.name for c in info.columns if c.auto_increment), None
+            )
         if part_col is not None:
             lo, hi = query_min_max(
                 self.spark, self.cfg.jdbc_url, dbtable, part_col,
@@ -1034,432 +1291,10 @@ class Restorer:
         )
 
     # ------------------------------------------------------------------
-    def _restore_table_jdbc(self, tbl: MDTableMeta) -> TableReport:
-        """Restore one table into a live database over JDBC (reference
-        tidb backend, lightning/backend/tidb.go:370-419): schema replay ->
-        read+transform -> duplicate policy -> batched INSERT -> JDBC
-        readback checksum -> auto-increment rebase. Improves on the
-        reference's direct-append delivery with a staged commit: rows
-        land in a `<table>__tls_stg` staging table, verify there, and
-        swap in atomically-enough (DROP+RENAME with crash recovery), so
-        retries/resumes never duplicate rows; only tables pre-populated
-        outside this tool are appended to directly (reference parity)."""
-        from tidb_lightning_spark.operators.transform import ROWID_COL
-        from tidb_lightning_spark.sinks.jdbc_sink import (
-            JDBCSink,
-            apply_duplicate_policy,
-        )
-
-        t0 = time.time()
-        rep = TableReport(db=tbl.db, table=tbl.name, status="failed")
-        sig = self.checkpoints.source_signature(tbl.data_files)
-        min_skip = self._min_skip_status()
-        try:
-            if self.checkpoints.should_skip(
-                tbl.db, tbl.name, sig, min_status=min_skip
-            ):
-                rep.status = "skipped"
-                return rep
-            dbname = f"{self.cfg.jdbc_table_prefix}{tbl.db}"
-            dbtable = f"{dbname}.{tbl.name}"
-            # schema replay step 0: the database itself (restoreSchema,
-            # restore.go:553-602) — on mysql-family targets every probe
-            # below would otherwise fail with 'Unknown database' (1049)
-            self.jdbc_sink.ensure_database(self.spark, dbname)
-            if tbl.view_schema_file:
-                # view replay at the live target (restore.go:553-602):
-                # MySQL-family targets accept the original body; other
-                # dialects would need a SQL translation — recorded, skipped
-                from tidb_lightning_spark.schema.ddl import parse_create_view
-                from tidb_lightning_spark.sinks.jdbc_sink import execute_ddl
-
-                with csv_source._decompress_open(
-                    tbl.view_schema_file, self.spark
-                ) as f:
-                    view = parse_create_view(
-                        f.read().decode("utf-8", errors="replace")
-                    )
-                if self.jdbc_sink.dialect == "mysql":
-                    cols = (
-                        "(" + ", ".join(f"`{c}`" for c in view.columns) + ")"
-                        if view.columns
-                        else ""
-                    )
-                    execute_ddl(
-                        self.spark, self.cfg.jdbc_url,
-                        f"CREATE OR REPLACE VIEW {dbtable} {cols} "
-                        f"AS {view.select}",
-                        self.jdbc_sink.properties,
-                    )
-                else:
-                    log.warning(
-                        "view `%s`.`%s`: no SQL translation for dialect "
-                        "%s — definition not replayed",
-                        tbl.db, tbl.name, self.jdbc_sink.dialect,
-                    )
-                self.checkpoints.update(
-                    tbl.db, tbl.name, "analyzed", signature=sig, view=True
-                )
-                rep.status = "imported"
-                return rep
-
-            from tidb_lightning_spark.checkpoints import STATUS as _STATUS
-            from tidb_lightning_spark.sinks.jdbc_sink import table_row_probe
-
-            staging_name = f"{tbl.name}__tls_stg"
-            staging_dbtable = f"{dbname}.{staging_name}"
-            probe = lambda t: table_row_probe(  # noqa: E731
-                self.spark, self.cfg.jdbc_url, t, self.jdbc_sink.properties
-            )
-            # crash-window recovery: a kill between the swap's DROP and
-            # RENAME leaves the final table missing but the staging table
-            # present (the checkpoint is < imported there, so this code
-            # always runs before any skip) — finish the rename so readers
-            # have a table again. The recovered table is OURS (possibly a
-            # partial staging from a mid-write crash), so the re-import
-            # below MUST take the swap path, never append onto it.
-            recovered = False
-            final_count = probe(dbtable)
-            if final_count is None and probe(staging_dbtable) is not None:
-                self.jdbc_sink.rename_table(
-                    self.spark, dbname, staging_name, tbl.name
-                )
-                final_count = probe(dbtable)
-                recovered = True
-
-            info = self._table_info(tbl)
-            prior_rec = self.checkpoints.get(tbl.db, tbl.name)
-            prior_status = prior_rec.get("status", 0)
-            # pre-swap marker left by a crash inside the commit window: it
-            # records what the VERIFIED staging table held just before the
-            # DROP+RENAME. Its presence means the final table (if any) is
-            # ours — either the old import (crash before DROP) or the
-            # swapped-in staging (crash after RENAME but before the
-            # 'imported' checkpoint write). Never append onto it.
-            staged = prior_rec.get("staged")
-            if (
-                staged is not None
-                and prior_status < _STATUS["imported"]
-                and prior_rec.get("signature") == sig
-                and final_count is not None
-                and final_count == staged.get("rows")
-            ):
-                # The swap completed (the live table matches the verified
-                # staging contents) — the crash only lost the checkpoint
-                # write. Finish the bookkeeping instead of re-importing
-                # (or worse, appending a duplicate copy of every row).
-                rep.rows = staged["rows"]
-                self.checkpoints.update(
-                    tbl.db, tbl.name, "imported", signature=sig, staged=None
-                )
-                if staged.get("checksum") is not None:
-                    rep.checksum = dict(staged["checksum"])
-                    self.checkpoints.update(
-                        tbl.db, tbl.name, "checksummed",
-                        signature=sig, checksum=rep.checksum,
-                    )
-                self._rebase_and_analyze(
-                    tbl, info, dbname, dbtable, sig, staged.get("auto_max")
-                )
-                rep.status = "imported"
-                metrics.TABLES.inc(
-                    metrics.TABLE_STATE_COMPLETED,
-                    metrics.TABLE_RESULT_SUCCESS,
-                )
-                log.info(
-                    "resumed `%s`.`%s`: swap had completed before the "
-                    "crash (staged marker matches the live table) — "
-                    "bookkeeping finished without re-import",
-                    tbl.db, tbl.name,
-                )
-                return rep
-            self.checkpoints.update(
-                tbl.db, tbl.name, "loaded", signature=sig, staged=None
-            )
-
-            df, _ = self._read_and_transform(tbl, info)
-            if df is None:  # schema-only table: DDL replay was the work
-                self.jdbc_sink.ensure_table(self.spark, info, dbtable)
-                rep.status = "imported"
-                self.checkpoints.update(
-                    tbl.db, tbl.name, "imported", signature=sig
-                )
-                return rep
-
-            # staged commit (engine Close -> Import, backend.go:300-439,
-            # carried over to JDBC): when the target is empty/absent — or
-            # was loaded by a previous run of ours, so a re-import
-            # REPLACES like the files backend — rows land in a staging
-            # table, are checksum-verified there, and only then swap in.
-            # Retries and resumes can never duplicate rows, and a failed
-            # verification never touches the live table. Only a table
-            # pre-populated outside this tool is appended to directly
-            # (reference tidb-backend semantics; a mid-write crash there
-            # can leave partial rows — documented parity).
-            use_swap = (
-                recovered
-                or final_count is None
-                or final_count == 0
-                or prior_status >= _STATUS["imported"]
-                # a pre-swap marker (even from a changed source, or with a
-                # final count that no longer matches) still proves the
-                # final table was written by US mid-commit — replace it,
-                # never treat it as an externally pre-populated table
-                or staged is not None
-            )
-            if tbl.schema_file is None:
-                # no-schema: the table object is the USER's (the model
-                # was fetched from the target) — deliver INTO it like the
-                # reference's tidb backend, never drop-and-swap a table
-                # we did not define (the staging copy would be rebuilt
-                # from the fetched model and lose target-side
-                # constraints/indexes beyond it)
-                use_swap = False
-            if use_swap:
-                self.jdbc_sink.drop_table(self.spark, staging_dbtable)
-                self.jdbc_sink.ensure_table(self.spark, info, staging_dbtable)
-                write_name, write_dbtable = staging_name, staging_dbtable
-            else:
-                self.jdbc_sink.ensure_table(self.spark, info, dbtable)
-                write_name, write_dbtable = tbl.name, dbtable
-
-            # strict mode: upfront probe — JDBC appends are not staged, so
-            # there is no post-write commit gate to hook (the reference's
-            # tidb backend errors statement-by-statement instead)
-            if self.cfg.strict_sql_mode and ERR_COL in df.columns:
-                bad = (
-                    df.filter(F.col(ERR_COL).isNotNull())
-                    .select(ERR_COL)
-                    .limit(3)
-                    .collect()
-                )
-                if bad:
-                    raise IngestError(
-                        f"strict sql_mode violations in "
-                        f"`{tbl.db}`.`{tbl.name}`: "
-                        f"columns {[r[0] for r in bad]}"
-                    )
-            if ERR_COL in df.columns:
-                df = df.drop(ERR_COL)
-
-            # duplicate policy BEFORE the checksum observation so the
-            # ingest-side checksum covers exactly the delivered rows
-            out = apply_duplicate_policy(
-                df, info.primary_key, self.cfg.on_duplicate,
-                order_col=ROWID_COL,
-            )
-            if ROWID_COL in out.columns:
-                out = out.drop(ROWID_COL)
-
-            want_cks = self.cfg.checksum != "off"
-            cols = list(out.columns)
-            ingest_cks = None
-            obs = None
-            if want_cks:
-                from pyspark.sql import Observation
-
-                from tidb_lightning_spark.functions.checksum import (
-                    checksum_aggs,
-                )
-
-                obs = Observation()
-                out = out.observe(obs, *checksum_aggs(cols))
-            self.jdbc_sink.write_table(out, dbname, write_name, pk=None)
-            if want_cks:
-                got = obs.get
-                ingest_cks = Checksum(
-                    got["kvs"], got["total_bytes"] or 0, got["checksum"] or 0
-                )
-
-            # remote checksum (I2/L2): read the WRITTEN table back over
-            # JDBC and recompute — the ADMIN CHECKSUM analog
-            # (checksum.go:104-147); in the staged flow this verifies the
-            # staging table BEFORE the swap, so the live table never sees
-            # unverified data. Partitioned on the integer PK when one
-            # exists (bounds from a one-row MIN/MAX probe): an unbounded
-            # spark.read.jdbc pulls the whole table through ONE
-            # connection, which at scale would serialize the scan.
-            written = self._jdbc_readback_df(write_dbtable, info).select(*cols)
-            auto_cols = [c for c in info.columns if c.auto_increment]
-            rand_cols = [c for c in info.columns if c.auto_random_bits]
-            from tidb_lightning_spark.functions.checksum import (
-                canonical_row,
-                row_hash64,
-            )
-
-            # ONE readback scan serves count + checksum + rebase max.
-            # The value-level triple is computed on BOTH paths: on the
-            # swap path it covers exactly the delivered rows; on a direct
-            # append it covers the WHOLE final table — which is exactly
-            # the reference's post-restore ADMIN CHECKSUM semantics
-            # (checksum.go:104-147, tests/error_summary): a target that
-            # already held rows before the import MUST fail verification,
-            # because the table no longer equals what was imported.
-            aggs = [F.count(F.lit(1)).alias("rows___")]
-            if want_cks:
-                canon = canonical_row(cols)
-                aggs.append(
-                    F.sum(F.length(canon)).cast("bigint").alias("bytes___")
-                )
-                aggs.append(F.bit_xor(row_hash64(cols)).alias("value___"))
-            if auto_cols:
-                aggs.append(
-                    F.max(F.col(auto_cols[0].name).cast("long"))
-                    .alias("auto_max___")
-                )
-            elif rand_cols:
-                # AUTO_RANDOM rebase base = max INCREMENTAL part: the
-                # composed id carries hash shard bits in the top, so the
-                # raw max would overshoot the allocator by ~2^shard_bits
-                # (reference rebases the allocator's rowid base,
-                # tidb.go:384-395 AlterAutoRandom)
-                c0 = rand_cols[0]
-                inc_mask = (1 << (63 - c0.auto_random_bits)) - 1
-                aggs.append(
-                    F.max(
-                        F.col(c0.name).cast("long").bitwiseAND(
-                            F.lit(inc_mask)
-                        )
-                    ).alias("auto_max___")
-                )
-            row = written.agg(*aggs).collect()[0].asDict()
-
-            def _verify_failed(msg: str) -> None:
-                if self.cfg.checksum == "required":
-                    if use_swap:
-                        # pre-commit gate: bad staging never swaps in
-                        self.jdbc_sink.drop_table(self.spark, staging_dbtable)
-                    self.checkpoints.update(
-                        tbl.db, tbl.name, "closed", signature=sig
-                    )
-                    raise IngestError(msg)
-                log.warning(msg)
-
-            readback = None
-            if use_swap:
-                rep.rows = row["rows___"]
-                if want_cks:
-                    readback = Checksum(
-                        rep.rows, row["bytes___"] or 0, row["value___"] or 0
-                    )
-                    if ingest_cks != readback:
-                        _verify_failed(
-                            f"checksum mismatch `{tbl.db}`.`{tbl.name}`: "
-                            f"ingest {ingest_cks} != readback {readback}"
-                        )
-            else:
-                rep.rows = row["rows___"] - (final_count or 0)
-                if want_cks:
-                    readback = Checksum(
-                        row["rows___"], row["bytes___"] or 0,
-                        row["value___"] or 0,
-                    )
-                    if ingest_cks != readback:
-                        # reference ADMIN CHECKSUM parity
-                        # (tests/error_summary): the final table holds
-                        # rows this import did not deliver — the
-                        # pre-populated conflict case the reference
-                        # flags as 'checksum mismatched'
-                        _verify_failed(
-                            f"checksum mismatch `{tbl.db}`.`{tbl.name}`: "
-                            f"ingest {ingest_cks} != table {readback} "
-                            f"(table pre-populated with "
-                            f"{final_count or 0} rows before the import)"
-                        )
-
-            # Import step: verified staging table swaps into place. A
-            # crash between DROP and RENAME is repaired by the recovery
-            # probe at the top of this method.
-            if use_swap:
-                # pre-swap marker: persists the verified staging contents
-                # BEFORE the non-atomic DROP+RENAME, so a crash anywhere in
-                # the commit window is recognized on resume (see the
-                # staged-resume check above) instead of routing into the
-                # append path and duplicating the table
-                self.checkpoints.update(
-                    tbl.db, tbl.name, "closed", signature=sig,
-                    staged={
-                        "rows": rep.rows,
-                        "checksum": (
-                            {
-                                "kvs": readback.kvs,
-                                "bytes": readback.total_bytes,
-                                "value": readback.value,
-                            }
-                            if readback is not None
-                            else None
-                        ),
-                        "auto_max": (
-                            int(row["auto_max___"])
-                            if row.get("auto_max___") is not None
-                            else None
-                        ),
-                    },
-                )
-                self.jdbc_sink.drop_table(self.spark, dbtable)
-                self.jdbc_sink.rename_table(
-                    self.spark, dbname, staging_name, tbl.name
-                )
-            self.checkpoints.update(
-                tbl.db, tbl.name, "imported", signature=sig, staged=None
-            )
-            if want_cks:
-                rep.checksum = {
-                    "kvs": readback.kvs,
-                    "bytes": readback.total_bytes,
-                    "value": readback.value,
-                }
-                self.checkpoints.update(
-                    tbl.db, tbl.name, "checksummed",
-                    signature=sig, checksum=rep.checksum,
-                )
-
-            self._rebase_and_analyze(
-                tbl, info, dbname, dbtable, sig,
-                int(row["auto_max___"])
-                if row.get("auto_max___") is not None
-                else None,
-            )
-            rep.status = "imported"
-            metrics.TABLES.inc(
-                metrics.TABLE_STATE_COMPLETED, metrics.TABLE_RESULT_SUCCESS
-            )
-            metrics.BYTES.inc(metrics.BYTE_STATE_FINISHED, by=tbl.total_size)
-            log.info(
-                "restored `%s`.`%s` -> jdbc: %d rows, %.1f MiB source in %.1fs",
-                tbl.db, tbl.name, rep.rows,
-                tbl.total_size / 1048576, time.time() - t0,
-            )
-        except Exception as exc:  # error summary (restore.go:89-129)
-            rep.error = f"{type(exc).__name__}: {exc}"
-            log.error("table `%s`.`%s` failed: %s", tbl.db, tbl.name, rep.error)
-            metrics.TABLES.inc(
-                metrics.TABLE_STATE_COMPLETED, metrics.TABLE_RESULT_FAILURE
-            )
-        finally:
-            for cached in self._table_caches:
-                try:
-                    cached.unpersist()
-                except Exception:
-                    pass
-            self._table_caches.clear()
-            self._engine_cache_slices.clear()
-            rep.seconds = time.time() - t0
-            metrics.IMPORT_SECONDS.observe(rep.seconds)
-        return rep
-
-    # ------------------------------------------------------------------
     def _rebase_and_analyze(
-        self,
-        tbl: MDTableMeta,
-        info: TableInfo,
-        dbname: str,
-        dbtable: str,
-        sig: str,
-        auto_max: int | None,
+        self, tbl: MDTableMeta, info: TableInfo, tgt: _JDBCTarget, sig: str
     ) -> None:
-        """Post-import finishing at the live JDBC target, shared by the
-        normal commit and the staged-resume path.
+        """Post-import finishing at the live JDBC target.
 
         Allocator rebase (L1/D2, restore/tidb.go:349-382) points the
         target's id generator past the loaded max; post-load ANALYZE (L3,
@@ -1467,31 +1302,31 @@ class Restorer:
         fail the load under analyze=required."""
         from tidb_lightning_spark.sinks.jdbc_sink import JDBCSink, execute_ddl
 
-        auto_cols = [c for c in info.columns if c.auto_increment]
-        rand_cols = [c for c in info.columns if c.auto_random_bits]
-        if auto_cols and auto_max is not None:
-            JDBCSink.rebase_auto_increment(
-                self.spark, self.cfg.jdbc_url, dbname, tbl.name,
-                auto_cols[0].name, auto_max + 1,
-                properties=self.jdbc_sink.properties,
-            )
-        elif rand_cols and auto_max is not None:
-            # auto-random tables rebase AUTO_RANDOM_BASE, never
-            # AUTO_INCREMENT (restore/tidb.go:384-395; tidb_test.go
-            # TestAlterAutoRandom) — auto_max is already the masked
-            # incremental part from the readback aggregation
-            JDBCSink.rebase_auto_random(
-                self.spark, self.cfg.jdbc_url, dbname, tbl.name,
-                auto_max + 1, properties=self.jdbc_sink.properties,
-            )
+        c = _auto_id_column(info)
+        if c is not None and tgt.auto_max is not None:
+            if c.auto_random_bits:
+                # auto-random tables rebase AUTO_RANDOM_BASE, never
+                # AUTO_INCREMENT (restore/tidb.go:384-395; tidb_test.go
+                # TestAlterAutoRandom) — auto_max is already the masked
+                # incremental part from the readback aggregation
+                JDBCSink.rebase_auto_random(
+                    self.spark, self.cfg.jdbc_url, tgt.db, tbl.name,
+                    tgt.auto_max + 1, properties=self.jdbc_sink.properties,
+                )
+            else:
+                JDBCSink.rebase_auto_increment(
+                    self.spark, self.cfg.jdbc_url, tgt.db, tbl.name,
+                    c.name, tgt.auto_max + 1,
+                    properties=self.jdbc_sink.properties,
+                )
         if self.cfg.analyze != "off":
             if self.jdbc_sink.dialect == "derby":
                 stats_sql = (
                     "CALL SYSCS_UTIL.SYSCS_UPDATE_STATISTICS("
-                    f"'{dbname.upper()}', '{tbl.name.upper()}', NULL)"
+                    f"'{tgt.db.upper()}', '{tbl.name.upper()}', NULL)"
                 )
             else:
-                stats_sql = f"ANALYZE TABLE {dbtable}"
+                stats_sql = f"ANALYZE TABLE {tgt.table}"
             try:
                 execute_ddl(
                     self.spark, self.cfg.jdbc_url, stats_sql,
@@ -1735,11 +1570,9 @@ class Restorer:
         if not data_files:
             return None, rowid_base
         parts: list[DataFrame] = []
-        # duplicate resolution needs the row id downstream as the
+        # a duplicate policy needs the row id downstream as the
         # deterministic first/last ordering key
-        keep_rowid = (
-            True if self.cfg.duplicate_resolution != "none" else None
-        )
+        keep_rowid = True if self._duplicate_policy(info) else None
 
         csv_files = [f for f in data_files if f.type == "csv"]
         sql_files = [f for f in data_files if f.type == "sql"]

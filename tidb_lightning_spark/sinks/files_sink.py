@@ -42,6 +42,59 @@ class CommitResult:
     seconds: float
 
 
+def _sort_plan(
+    df: DataFrame,
+    sort_columns: list[str] | None,
+    source_bytes: int,
+    observation=None,
+    observe_aggs: list | None = None,
+    n_ranges: int | None = None,
+) -> DataFrame:
+    """The write plan shared by `write_table` and `write_engine`: range
+    partition + local sort on the sort columns, with the ingest
+    observation attached above the exchange."""
+    out = df
+    if sort_columns:
+        # Range count: 96 MiB target files at scale (first term wins on
+        # big tables); floor at cluster parallelism for small inputs so
+        # the sort+write isn't single-threaded (second term, local
+        # bench / tail tables — 2 MiB floor keeps every core busy; on a
+        # shared cluster ingesting many tables concurrently, idle cores
+        # do other tables, so the 96 MiB term is what governs at scale).
+        # More, smaller range partitions are still globally
+        # non-overlapping — correctness is unaffected.
+        cores = df.sparkSession.sparkContext.defaultParallelism
+        n = n_ranges or max(
+            (source_bytes + TARGET_FILE_BYTES - 1) // TARGET_FILE_BYTES,
+            min(cores, max(1, source_bytes // (2 * 1024 * 1024))),
+            1,
+        )
+        # one shuffle: range-partition on the PK, then local sort —
+        # Spark's external sort handles spill (the SST/pebble analog).
+        # repartitionByRange SAMPLES its input, re-executing the
+        # read+transform chain once to pick bounds. That extra scan is
+        # deliberately NOT avoided with persist(): measured at 37 MiB
+        # and 373 MiB, caching the parsed rows costs 2-3x more (cache
+        # build + columnar re-read) than re-parsing, and at 100 TB a
+        # full-input persist is a second copy of the dataset on
+        # executor disks while the sampling scan remains a ~1x read
+        # with pruning intact.
+        if n > 1:
+            out = out.repartitionByRange(n, *sort_columns)
+        # metrics node ABOVE the exchange: the range sampler executes
+        # the exchange INPUT, so metrics attached below it would
+        # accumulate twice (count 2x, xor self-cancelling); above it,
+        # only the write job evaluates them — one exact accumulation
+        # with zero extra scans.
+        if observation is not None:
+            out = out.observe(observation, *observe_aggs)
+            observation = None
+        out = out.sortWithinPartitions(*sort_columns)
+    if observation is not None:  # unsorted path: write job is the only job
+        out = out.observe(observation, *observe_aggs)
+    return out
+
+
 class FilesSink:
     def __init__(self, warehouse: str, fmt: str = "parquet"):
         self.warehouse = warehouse
@@ -127,47 +180,9 @@ class FilesSink:
         if os.path.exists(staging):
             shutil.rmtree(staging)
 
-        out = df
-        if sort_columns:
-            # Range count: 96 MiB target files at scale (first term wins on
-            # big tables); floor at cluster parallelism for small inputs so
-            # the sort+write isn't single-threaded (second term, local
-            # bench / tail tables — 2 MiB floor keeps every core busy; on a
-            # shared cluster ingesting many tables concurrently, idle cores
-            # do other tables, so the 96 MiB term is what governs at scale).
-            # More, smaller range partitions are still globally
-            # non-overlapping — correctness is unaffected.
-            spark = df.sparkSession
-            cores = spark.sparkContext.defaultParallelism
-            n = n_ranges or max(
-                (source_bytes + TARGET_FILE_BYTES - 1) // TARGET_FILE_BYTES,
-                min(cores, max(1, source_bytes // (2 * 1024 * 1024))),
-                1,
-            )
-            # one shuffle: range-partition on the PK, then local sort —
-            # Spark's external sort handles spill (the SST/pebble analog).
-            # repartitionByRange SAMPLES its input, re-executing the
-            # read+transform chain once to pick bounds. That extra scan is
-            # deliberately NOT avoided with persist(): measured at 37 MiB
-            # and 373 MiB, caching the parsed rows costs 2-3x more (cache
-            # build + columnar re-read) than re-parsing, and at 100 TB a
-            # full-input persist is a second copy of the dataset on
-            # executor disks while the sampling scan remains a ~1x read
-            # with pruning intact.
-            if n > 1:
-                out = out.repartitionByRange(n, *sort_columns)
-            # metrics node ABOVE the exchange: the range sampler executes
-            # the exchange INPUT, so metrics attached below it would
-            # accumulate twice (count 2x, xor self-cancelling); above it,
-            # only the write job evaluates them — one exact accumulation
-            # with zero extra scans.
-            if observation is not None:
-                out = out.observe(observation, *observe_aggs)
-                observation = None
-            out = out.sortWithinPartitions(*sort_columns)
-        if observation is not None:  # unsorted path: write job is the only job
-            out = out.observe(observation, *observe_aggs)
-
+        out = _sort_plan(
+            df, sort_columns, source_bytes, observation, observe_aggs, n_ranges
+        )
         writer = out.write.mode("overwrite").format(self.fmt)
         if partition_columns:
             writer = writer.partitionBy(*partition_columns)
@@ -290,23 +305,7 @@ class FilesSink:
         if os.path.exists(staging):
             shutil.rmtree(staging)
 
-        out = df
-        if sort_columns:
-            spark = df.sparkSession
-            cores = spark.sparkContext.defaultParallelism
-            n = max(
-                (source_bytes + TARGET_FILE_BYTES - 1) // TARGET_FILE_BYTES,
-                min(cores, max(1, source_bytes // (2 * 1024 * 1024))),
-                1,
-            )
-            if n > 1:
-                out = out.repartitionByRange(n, *sort_columns)
-            if observation is not None:  # above the exchange — see write_table
-                out = out.observe(observation, *observe_aggs)
-                observation = None
-            out = out.sortWithinPartitions(*sort_columns)
-        if observation is not None:
-            out = out.observe(observation, *observe_aggs)
+        out = _sort_plan(df, sort_columns, source_bytes, observation, observe_aggs)
         out.write.mode("overwrite").format(self.fmt).save(staging)
         if manifest is not None:
             # closed-engine manifest: written AFTER the data files, so a
@@ -484,7 +483,7 @@ def upsert_table(
     db: str,
     table: str,
     key_columns: list[str],
-    keys_unique: bool = False,
+    _keys_unique: bool = False,
 ) -> CommitResult:
     """MERGE-by-key into an existing files-backend table, copy-on-write:
     rows whose key exists take the update's values, new keys insert,
@@ -501,10 +500,13 @@ def upsert_table(
     Updates must be unique on the key (checked) — a nondeterministic
     dropDuplicates winner could never be re-derived on retry; callers
     with multi-version batches pre-reduce (e.g. max-by ingest sequence)
-    before calling. A caller whose plan makes uniqueness structural
-    (e.g. a row_number()==1 filter over a per-key window) may pass
-    `keys_unique=True` to skip the duplicate-probe job — the probe
-    would be a whole extra action that can never fire.
+    before calling.
+
+    `_keys_unique=True` skips that duplicate-probe job, and is internal:
+    it is only correct when a `row_number() == 1` filter over a window
+    partitioned by exactly `key_columns` produced `updates` (the
+    streaming CDC drain), which makes duplicates structurally
+    impossible. Any other caller must leave the probe on.
 
     Scale shape: ONE anti-join keyed on the PK (both sides hash-
     partition on the key; the update side is usually broadcast-sized
@@ -539,7 +541,7 @@ def upsert_table(
             f"upsert into `{db}`.`{table}` needs key columns — the table "
             "has no primary key in _tls_meta.json; pass --key explicitly"
         )
-    dup = 0 if keys_unique else (
+    dup = 0 if _keys_unique else (
         updates.groupBy(*key_columns)
         .count()
         .filter("count > 1")

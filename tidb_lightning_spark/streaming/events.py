@@ -462,7 +462,7 @@ def stream_cdc_apply(
                 # per key — tell upsert so it skips the dup-probe job
                 upsert_table(
                     sink, reduced, db, table, key_columns,
-                    keys_unique=seq_column is not None,
+                    _keys_unique=seq_column is not None,
                 )
         finally:
             reduced.unpersist()
