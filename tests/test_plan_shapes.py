@@ -648,3 +648,19 @@ def test_inverted_index_two_level_agg_no_distinct_shuffle(spark):
     assert len(re.findall(r"\(\d+\) Scan parquet", plan)) == 1
     assert "TakeOrderedAndProject" in plan
     assert n_exchanges(plan) <= 3, plan
+
+
+def test_dense_row_ids_no_shuffle_no_window(spark):
+    """Dense row ids (auto-increment / auto-random columns, every
+    streaming micro-batch) come from a broadcast per-partition base
+    table: the rows themselves are never hash-shuffled or sorted into a
+    window."""
+    from tidb_lightning_spark.operators.transform import assign_row_ids
+
+    df = spark.range(0, 1000, numPartitions=4).selectExpr(
+        "cast(id as string) as v"
+    )
+    plan = assign_row_ids(df, 10, dense=True)._jdf.queryExecution().toString()
+    physical = plan.split("== Physical Plan ==")[1]
+    assert "Exchange hashpartitioning" not in physical, physical
+    assert "Window" not in physical, physical

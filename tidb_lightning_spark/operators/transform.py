@@ -89,53 +89,71 @@ def permute_columns(
     return df.select(*selected, *[F.col(c) for c in passthrough])
 
 
+def allocate_row_ids(
+    df: DataFrame,
+    key: Column,
+    ordinal: Column,
+    base: int = 0,
+    order=lambda k: k,
+) -> tuple[DataFrame, list[int]]:
+    """`_tidb_rowid = base[key] + ordinal + 1` over exact per-key ranges —
+    the reference's pre-allocated chunk ranges (region.go:208-315).
+
+    One count-per-key job sizes the ranges; keys take consecutive ranges
+    from `base`, sorted by `order(key)`, and the small (key, base) table
+    is broadcast-joined back, so the rows are never shuffled. `ordinal`
+    must number each key's rows 0..n-1. Returns (df, bounds): the keys'
+    bases in order, then the next free base."""
+    keyed = df.withColumns({"_tls_k": key, "_tls_o": ordinal})
+    counts = keyed.groupBy("_tls_k").count()
+    rows, bounds = [], [base]
+    for k, n in sorted(counts.collect(), key=lambda r: order(r[0])):
+        rows.append((k, bounds[-1]))
+        bounds.append(bounds[-1] + n)
+    key_type = counts.schema["_tls_k"].dataType.simpleString()
+    bases = df.sparkSession.createDataFrame(
+        rows, f"_tls_k {key_type}, _tls_b bigint"
+    )
+    out = (
+        keyed.join(F.broadcast(bases), "_tls_k", "left")
+        .withColumn(ROWID_COL, F.col("_tls_b") + F.col("_tls_o") + 1)
+        .drop("_tls_k", "_tls_o", "_tls_b")
+    )
+    return out, bounds
+
+
 def assign_row_ids(df: DataFrame, base: int = 0, dense: bool = False) -> DataFrame:
     """Deterministic row ids (SURVEY.md §2.D1, region.go:208-286).
 
     Three strategies, cheapest that suffices:
-    * `_row_seq`+file base when the reader provides one (SQL dumps):
-      exact per-file ranges, zero extra work — the reference's scheme.
+    * `_row_seq` when the reader provides one (SQL dumps): the reader
+      already folded per-file bases in — the reference's scheme.
     * dense=False: `monotonically_increasing_id()` — unique and stable for
       a given (input, split conf); ids are sparse (partition-striped).
       Fine when the id is internal (sort key for PK-less tables).
     * dense=True (auto-inc/auto-random columns, which must fit the column
-      type): two-pass exact allocation — a per-partition count pass on the
-      driver builds cumulative bases (the analog of populateChunks'
-      pre-allocated ranges), then ids = base[pid] + row_number-in-partition.
-      One extra scan, no shuffle of the data itself.
+      type): exact allocation per partition — one count-per-partition job
+      builds cumulative bases (the analog of populateChunks' pre-allocated
+      ranges), then id = base[pid] + index-in-partition + 1 through a
+      broadcast join: one extra scan, no shuffle, no sort.
     """
-    if "_row_seq" in df.columns and "_file_base" in df.columns:
+    if "_row_seq" in df.columns:
         return df.withColumn(
-            ROWID_COL, (F.col("_file_base") + F.col("_row_seq") + 1 + base)
-        ).drop("_row_seq", "_file_base")
+            ROWID_COL, F.col("_row_seq") + 1 + base
+        ).drop("_row_seq")
     if not dense:
         return df.withColumn(
             ROWID_COL, F.monotonically_increasing_id() + F.lit(base + 1)
         )
-    from pyspark.sql import Window
-
-    tmp = df.withColumn("_pid", F.spark_partition_id()).withColumn(
-        "_mono", F.monotonically_increasing_id()
-    )
-    counts = {
-        r["_pid"]: r["cnt"]
-        for r in tmp.groupBy("_pid").agg(F.count(F.lit(1)).alias("cnt")).collect()
-    }
-    bases: dict[int, int] = {}
-    acc = base
-    for pid in sorted(counts):
-        bases[pid] = acc
-        acc += counts[pid]
-    mapping = F.create_map(
-        *[x for pid, b in bases.items() for x in (F.lit(pid), F.lit(b))]
-    )
-    w = Window.partitionBy("_pid").orderBy("_mono")
-    return (
-        tmp.withColumn(
-            ROWID_COL, mapping[F.col("_pid")] + F.row_number().over(w)
-        )
-        .drop("_pid", "_mono")
-    )
+    pid = F.spark_partition_id()
+    # monotonically_increasing_id is (pid << 33) + index-in-partition
+    index = F.monotonically_increasing_id() - F.shiftleft(pid.cast("long"), 33)
+    out, bounds = allocate_row_ids(df, pid, index, base)
+    if len(bounds) > 1 and bounds[-2] < 1 << 31:
+        # dense ids have always been INT while every partition base fits
+        # one; AUTO_RANDOM hashes the id, and the hash depends on its type
+        out = out.withColumn(ROWID_COL, F.col(ROWID_COL).cast("int"))
+    return out
 
 
 def cast_columns(

@@ -22,3 +22,9 @@ def file_uri_to_path(path: str) -> str:
     if path.startswith("file:"):
         return _FILE_URI.sub("/", unquote(path))
     return path
+
+
+def is_remote(path: str) -> bool:
+    """True for scheme'd URIs (s3a://, hdfs://, ...) a local open() cannot
+    read; `file:` URIs are local."""
+    return "://" in path and not path.startswith("file:")

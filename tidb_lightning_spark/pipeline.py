@@ -41,6 +41,7 @@ from tidb_lightning_spark.checkpoints import open_checkpoint_store
 from tidb_lightning_spark.config import Config
 from tidb_lightning_spark.functions.checksum import Checksum, checksum
 from tidb_lightning_spark.operators.transform import ERR_COL, transform_table
+from tidb_lightning_spark.paths import is_remote
 from tidb_lightning_spark.schema.ddl import TableInfo, parse_create_table
 from tidb_lightning_spark.sinks.files_sink import FilesSink
 from tidb_lightning_spark.sources import csv_source, sqldump_source
@@ -204,6 +205,26 @@ def _readback_pass(
             stat, _, col = k.partition("__")
             stats.setdefault(col, {})[stat] = v
     return rows, cks, stats, None if top is None else int(top)
+
+
+def _text_size(f, path: str | None = None) -> int:
+    """Bytes of text a scan of data file `f` (read from `path`, default
+    `f.path`) parses: the input of row-id reservation. Local files report
+    their DECOMPRESSED size — a gz file's rows can exceed its compressed
+    bytes // divisor and overrun the next base. Remote files keep the
+    discovery size: a plain one is its text size; a compressed one cannot
+    be probed locally, so warn that its range may overrun."""
+    path = path or f.path
+    if os.path.exists(path):
+        return sqldump_source.decompressed_size(path)
+    if f.compression or sqldump_source._is_compressed(path):
+        log.warning(
+            "remote compressed file %s: row-id range reserved from "
+            "COMPRESSED size — ranges may overrun on highly-compressible "
+            "data; prefer uncompressed remote sources",
+            path,
+        )
+    return f.file_size
 
 
 def _auto_id_column(info: TableInfo):
@@ -1443,24 +1464,16 @@ class Restorer:
                 f"created there first (reference tidb-backend semantics), "
                 f"or provide {tbl.name}-schema.sql"
             )
-        # no-schema mode: infer (parquet has real types; CSV header gives
-        # all-string columns typed as text)
+        # no-schema mode: every column the data names becomes a text
+        # column (typed parquet values are cast to it)
         first = tbl.data_files[0]
         if first.type == "parquet":
-            df = read_table(self.spark, first.path)
-            from tidb_lightning_spark.schema.types import MySQLType
-            from tidb_lightning_spark.schema.ddl import ColumnInfo
-
-            info = TableInfo(db=tbl.db, name=tbl.name)
-            for name in df.columns:
-                if name == "_metadata":
-                    continue  # the Arrow-fallback scan's real metadata col
-                info.columns.append(ColumnInfo(name=name, mysql=MySQLType("text")))
-            return info
-        from tidb_lightning_spark.schema.ddl import ColumnInfo
-        from tidb_lightning_spark.schema.types import MySQLType
-
-        if first.type == "jsonl":
+            header = [
+                c for c in read_table(self.spark, first.path).columns
+                # the Arrow-fallback scan's real metadata column
+                if c != "_metadata"
+            ]
+        elif first.type == "jsonl":
             # first object's keys, in document order (driver-side bounded
             # peek through the same stream adapter as CSV headers). LLM
             # corpus dumps routinely carry >1 MiB first documents, so the
@@ -1522,19 +1535,17 @@ class Restorer:
             # names from the TARGET database there) synthesizes c0..cN
             # from the first statement's arity so the restore still
             # lands (rename downstream via cli sql views)
-            is_remote = (
-                "://" in first.path and not first.path.startswith("file:")
-            )
+            peek_spark = self.spark if is_remote(first.path) else None
             header = sqldump_source.peek_columns(
                 first.path,
                 self.cfg.character_set or "utf-8",
-                spark=self.spark if is_remote else None,
+                spark=peek_spark,
             )
             if not header:
                 arity = sqldump_source.peek_arity(
                     first.path,
                     self.cfg.character_set or "utf-8",
-                    spark=self.spark if is_remote else None,
+                    spark=peek_spark,
                 )
                 header = [f"c{i}" for i in range(arity)] if arity else None
         else:
@@ -1548,6 +1559,9 @@ class Restorer:
                 f"no-schema requires a CSV header, column-listed SQL "
                 f"dump, JSONL or parquet for `{tbl.db}`.`{tbl.name}`"
             )
+        from tidb_lightning_spark.schema.ddl import ColumnInfo
+        from tidb_lightning_spark.schema.types import MySQLType
+
         info = TableInfo(db=tbl.db, name=tbl.name)
         for name in header:
             info.columns.append(ColumnInfo(name=name, mysql=MySQLType("text")))
@@ -1573,6 +1587,48 @@ class Restorer:
         # a duplicate policy needs the row id downstream as the
         # deterministic first/last ordering key
         keep_rowid = True if self._duplicate_policy(info) else None
+
+        def reserve(files) -> int:
+            # a text row of n columns takes >= n bytes (region.go:208-
+            # 225), so this many ids cover every row of `files`
+            n_bytes = sum(_text_size(f) for f in files)
+            return n_bytes // max(1, len(info.columns)) + 1
+
+        def finish(df, file_cols, reserved, persist=False, **kw) -> None:
+            # the tail of every text scan group: transform with ids from
+            # rowid_base, then move rowid_base past the group's reserved
+            # ids so the next group's range starts beyond them
+            nonlocal rowid_base
+            part = transform_table(
+                df,
+                info,
+                file_cols,
+                self.pinned_ts,
+                strict=self.cfg.strict_sql_mode,
+                rowid_base=rowid_base,
+                keep_rowid=keep_rowid,
+                **kw,
+            )
+            rowid_base += reserved
+            if persist:
+                # Persist the parsed+cast rows: unlike the CSV path
+                # (where the range sampler's re-scan is cheaper than a
+                # cache round-trip — files_sink.write_table docstring),
+                # the SQL-dump scan is a Python statement parse that
+                # costs 10-30x the downstream plan, and the sampler
+                # would run it TWICE. MEMORY_AND_DISK; released in
+                # restore_table's finally, so on an engine-granular
+                # import the cache footprint is the TABLE's parsed rows
+                # (engines materialize lazily but accumulate until the
+                # table commits) — spilled to executor disk, the same
+                # per-table on-disk footprint as the reference's SST
+                # intermediates (backend/local.go memtable->SST), not a
+                # new cost class.
+                from pyspark import StorageLevel
+
+                part = part.persist(StorageLevel.MEMORY_AND_DISK)
+                self._table_caches.append(part)
+            parts.append(part)
 
         csv_files = [f for f in data_files if f.type == "csv"]
         sql_files = [f for f in data_files if f.type == "sql"]
@@ -1609,24 +1665,7 @@ class Restorer:
                     ]
                 )
             )
-            group_bytes = 0
-            for f in jsonl_files:
-                if os.path.exists(f.path):
-                    group_bytes += sqldump_source.decompressed_size(f.path)
-                else:
-                    group_bytes += f.file_size
-            parts.append(
-                transform_table(
-                    df,
-                    info,
-                    None,
-                    self.pinned_ts,
-                    strict=self.cfg.strict_sql_mode,
-                    rowid_base=rowid_base,
-                    keep_rowid=keep_rowid,
-                )
-            )
-            rowid_base += group_bytes // max(1, len(info.columns)) + 1
+            finish(df, None, reserve(jsonl_files))
 
         if csv_files:
             # BLOB-in-CSV byte preservation (reference tests/csv
@@ -1695,18 +1734,14 @@ class Restorer:
                 file_cols = list(header) if header else None
                 if raw_read:
                     srcs = file_cols or [c.name for c in info.columns]
-                    for i, cname in enumerate(srcs):
-                        if (
-                            f"_c{i}" in df.columns
-                            and cname.lower() not in bin_cols
-                        ):
-                            df = df.withColumn(
-                                f"_c{i}",
-                                F.decode(
-                                    F.encode(F.col(f"_c{i}"), "ISO-8859-1"),
-                                    "UTF-8",
-                                ),
-                            )
+                    df = df.withColumns({
+                        f"_c{i}": F.decode(
+                            F.encode(F.col(f"_c{i}"), "ISO-8859-1"), "UTF-8"
+                        )
+                        for i, cname in enumerate(srcs)
+                        if f"_c{i}" in df.columns
+                        and cname.lower() not in bin_cols
+                    })
                 # MySQL \n/\t/... escapes survive the CSV lexer as two
                 # chars; restore them inside the cast of string-family
                 # target columns (cast.mysql_unescape_expr rationale)
@@ -1723,54 +1758,17 @@ class Restorer:
                         for c in info.columns
                         if c.mysql.base in STRING_FAMILY_BASES
                     }
-                # DECOMPRESSED sizes (same fix as the SQL-dump path): a
-                # gz CSV's rows can exceed compressed_bytes // n_cols,
-                # overrunning the next group's row-id base. Remote-scheme
-                # URIs (s3a://...) keep the discovery size — plain remote
-                # files have size == text size; compressed remote files
-                # can't be probed locally, so warn: their row-id ranges
-                # may overrun (prefer uncompressed remote sources).
-                group_bytes = 0
                 pathset = set(paths)
-                for f in csv_files:
-                    if f.path not in pathset:
-                        continue
-                    if os.path.exists(f.path):
-                        group_bytes += sqldump_source.decompressed_size(f.path)
-                    else:
-                        if f.compression or sqldump_source._is_compressed(f.path):
-                            log.warning(
-                                "remote compressed CSV %s: row-id range "
-                                "reserved from COMPRESSED size — ranges "
-                                "may overrun on highly-compressible data; "
-                                "prefer uncompressed remote sources",
-                                f.path,
-                            )
-                        group_bytes += f.file_size
-                parts.append(
-                    transform_table(
-                        df,
-                        info,
-                        file_cols,
-                        self.pinned_ts,
-                        strict=self.cfg.strict_sql_mode,
-                        rowid_base=rowid_base,
-                        keep_rowid=keep_rowid,
-                        unescape_cols=esc_cols,
-                        binary_encoding=(
-                            "ISO-8859-1" if raw_read else "UTF-8"
-                        ),
-                    )
+                finish(
+                    df,
+                    file_cols,
+                    reserve([f for f in csv_files if f.path in pathset]),
+                    unescape_cols=esc_cols,
+                    binary_encoding="ISO-8859-1" if raw_read else "UTF-8",
                 )
-                # next group's ids start beyond this group's upper bound
-                # (region.go:208-225 divisor trick: bytes/#cols >= rows)
-                rowid_base += group_bytes // max(1, len(info.columns)) + 1
 
         if sql_files:
-            remote_set = {
-                f.path for f in sql_files
-                if "://" in f.path and not f.path.startswith("file:")
-            }
+            remote_set = {f.path for f in sql_files if is_remote(f.path)}
             charset = (self.cfg.character_set or "utf-8").lower()
 
             def _eff(path: str, remote: bool) -> str:
@@ -1842,118 +1840,68 @@ class Restorer:
             # lz4 dumps: no JVM codec reads the lz4 frame format, and the
             # range reader wants seekable plain text — materialize ONCE
             # driver-side (same contract as the transcode step above;
-            # no-op when nothing is .lz4). The base mapping below keys on
-            # the path the scan actually reads, so rewrite before it.
+            # no-op when nothing is .lz4). The row-id bases below are
+            # sized from the path the scan actually reads, so rewrite
+            # before them.
             mat = csv_source.materialize_lz4(
                 [actual[f.path] for f in local_sql]
             )
             actual.update(zip((f.path for f in local_sql), mat))
             groups: dict[tuple, list] = {}
             for f in sql_files:
-                is_remote = f.path in remote_set
+                remote = f.path in remote_set
                 cols = sqldump_source.peek_columns(
                     actual[f.path],
-                    eff[f.path] if is_remote else "utf-8",
-                    spark=self.spark if is_remote else None,
+                    eff[f.path] if remote else "utf-8",
+                    spark=self.spark if remote else None,
                 )
                 # remote groups must share a charset too: the ranged
                 # reader decodes one encoding per scan
                 key = (
                     tuple(cols) if cols else (),
-                    is_remote,
-                    eff[f.path] if is_remote else "utf-8",
+                    remote,
+                    eff[f.path] if remote else "utf-8",
                 )
                 groups.setdefault(key, []).append(f)
-            for (key, is_remote, group_cs), files in groups.items():
+            for (key, remote, group_cs), files in groups.items():
                 file_cols = list(key) if key else None
+                # the readers fold per-file row-id bases (region.go:252-
+                # 286) into _row_seq, sized with the file's arity
                 n_cols = len(file_cols) if file_cols else len(info.columns)
-                # per-file row-id bases from file sizes (region.go:252-286);
-                # keys are the paths the scan actually read (= _src_file).
-                # The divisor MUST match the reader's (n_cols + 2, the
-                # file's arity): chunk bases inside a file go up to
-                # size // that divisor, so reserving less here would let a
-                # split file's sequence overrun the next file's base.
-                bases, acc = {}, rowid_base
-                if is_remote:
+                if remote:
                     # whole-file tasks through the Hadoop binaryFile
                     # connector (read_sql_files_remote docstring; parity:
                     # the reference never splits .sql mid-file either,
                     # region.go:131-234). Plain .sql only — the guard
                     # above — so the observed byte length IS the text
                     # size the divisor bound needs.
-                    df, sizes = sqldump_source.read_sql_files_remote(
+                    df, reserved = sqldump_source.read_sql_files_remote(
                         self.spark,
                         [f.path for f in files],
                         n_cols,
                         group_cs,
                     )
-                    for p in sorted(sizes):
-                        bases[p] = acc
-                        acc += sizes[p] // (n_cols + 2) + 1
                 else:
+                    bases, reserved = sqldump_source.file_bases(
+                        [_text_size(f, actual[f.path]) for f in files], n_cols
+                    )
                     df = sqldump_source.read_sql_files(
                         self.spark,
                         [actual[f.path] for f in files],
                         n_cols,
                         "utf-8",
+                        bases=bases,
                     )
-                    # Sizes come from the DECOMPRESSED/transcoded text the
-                    # scan actually parses (decompressed_size), not
-                    # f.file_size: a gz dump's decompressed rows can exceed
-                    # compressed_size // divisor, overrunning the next
-                    # base -> duplicate row ids.
-                    for f in files:
-                        ap = os.path.abspath(actual[f.path])
-                        bases[ap] = acc
-                        acc += (
-                            sqldump_source.decompressed_size(ap)
-                            // (n_cols + 2) + 1
-                        )
-                rowid_base = acc
-                mapping = F.create_map(
-                    *[
-                        x
-                        for path, b in bases.items()
-                        for x in (F.lit(path), F.lit(b))
-                    ]
-                )
-                # _src_file is the plain abspath the range reader was
-                # handed (NOT a percent-encoded URI — the reader emits the
-                # path it opened), so the lookup is a direct match even
-                # for exotic filenames
-                df = df.withColumn(
-                    "_file_base", mapping[F.col("_src_file")]
-                ).drop("_src_file")
-                part = transform_table(
+                finish(
                     df,
-                    info,
                     file_cols,
-                    self.pinned_ts,
-                    strict=self.cfg.strict_sql_mode,
+                    reserved,
+                    persist=True,
                     binary_encoding="ISO-8859-1",
-                    keep_rowid=keep_rowid,
                     # only SQL dumps can emit DEFAULT_SENTINEL (empty
                     # tuples / DEFAULT keyword); CSV never pays for it
                     sentinel_defaults=True,
                 )
-                # Persist the parsed+cast rows: unlike the CSV path
-                # (where the range sampler's re-scan is cheaper than a
-                # cache round-trip — files_sink.write_table docstring),
-                # the SQL-dump scan is a Python statement parse that
-                # costs 10-30x the downstream plan, and the sampler
-                # would run it TWICE. MEMORY_AND_DISK; released in
-                # restore_table's finally, so on an engine-granular
-                # import the cache footprint is the TABLE's parsed rows
-                # (engines materialize lazily but accumulate until the
-                # table commits) — spilled to executor disk, the same
-                # per-table on-disk footprint as the reference's SST
-                # intermediates (backend/local.go memtable->SST), not a
-                # new cost class.
-                from pyspark import StorageLevel
-
-                part = part.persist(StorageLevel.MEMORY_AND_DISK)
-                self._table_caches.append(part)
-                parts.append(part)
 
         if parquet_files:
             df = read_table(self.spark, [f.path for f in parquet_files])
@@ -1973,68 +1921,26 @@ class Restorer:
                 # bases + the in-file row position — identical across runs
                 # regardless of split size or task scheduling, unlike
                 # monotonically_increasing_id which is partition-striped.
-                #
-                # Per-file row counts come from ONE distributed
-                # aggregation over `_metadata.file_path` (column-pruned to
-                # the constant metadata struct — no data pages read), not
-                # a driver-side loop over pyarrow footers: at 100 TB /
-                # ~1M files the serial footer walk is hours of driver IO
-                # and breaks outright on scheme'd (s3a://...) paths, while
-                # the metadata agg is a map-side count that also hands us
-                # the EXACT file-path strings Spark produces. The base
-                # lookup is then a broadcast hash-join probe per row
-                # instead of r8's per-row url_decode + two regexes + an
-                # O(files) create_map literal scan (profiled at 1.3 s of
-                # the 9.7 s sf0.1 x10 ingest, and unusable past a few
-                # thousand files where the map literal breaks codegen).
-                from tidb_lightning_spark.operators.transform import ROWID_COL
-
-                per_file = (
-                    df.groupBy(
-                        F.col("_metadata.file_path").alias("_tls_fp")
-                    )
-                    .agg(F.count(F.lit(1)).alias("_tls_n"))
-                    .collect()
+                # Per-file row counts come from ONE distributed count over
+                # `_metadata.file_path` (column-pruned to the constant
+                # metadata struct — no data pages read), not a driver-side
+                # walk over footers, which is hours of driver IO at ~1M
+                # files and breaks on scheme'd paths. Bases follow the
+                # decoded path, so their order matches the sorted source
+                # listing whatever the URI encoding.
+                from tidb_lightning_spark.operators.transform import (
+                    allocate_row_ids,
                 )
+                from tidb_lightning_spark.paths import file_uri_to_path
 
-                def _decode(fp: str) -> str:
-                    # Spark emits the Hadoop URI form (file:/x, %XX-quoted,
-                    # '+' literal); decode so base allocation order matches
-                    # the sorted source listing independent of encoding
-                    from tidb_lightning_spark.paths import file_uri_to_path
-
-                    return file_uri_to_path(fp)
-
-                base_rows = []
-                acc = rowid_base
-                for r in sorted(per_file, key=lambda r: _decode(r["_tls_fp"])):
-                    base_rows.append((r["_tls_fp"], acc))
-                    acc += r["_tls_n"]
-                rowid_base = acc
-                if base_rows:
-                    bases_df = self.spark.createDataFrame(
-                        base_rows, "_tls_fp string, _tls_base bigint"
-                    )
-                    df = (
-                        df.withColumn(
-                            "_tls_fp0", F.col("_metadata.file_path")
-                        )
-                        .withColumn(
-                            "_tls_ri", F.col("_metadata.row_index")
-                        )
-                        .join(
-                            F.broadcast(bases_df),
-                            F.col("_tls_fp0") == F.col("_tls_fp"),
-                            "left",
-                        )
-                        .withColumn(
-                            ROWID_COL,
-                            F.col("_tls_base") + F.col("_tls_ri") + 1,
-                        )
-                        .drop("_tls_fp0", "_tls_fp", "_tls_ri", "_tls_base")
-                    )
-                else:  # every parquet file is empty
-                    df = df.withColumn(ROWID_COL, F.lit(None).cast("long"))
+                df, bounds = allocate_row_ids(
+                    df,
+                    F.col("_metadata.file_path"),
+                    F.col("_metadata.row_index"),
+                    rowid_base,
+                    order=file_uri_to_path,
+                )
+                rowid_base = bounds[-1]
             # full transform chain on the typed input: cast-where-differs,
             # defaults (pinned ts), auto-id fill, gencols, strict flags —
             # the reference runs parquet through the same encode path as

@@ -35,7 +35,10 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from tidb_lightning_spark.functions import checksum as cks
-from tidb_lightning_spark.sources.parquet_source import read_table
+from tidb_lightning_spark.sources.parquet_source import (
+    local_parquet_files,
+    read_table,
+)
 
 TABLES = (
     "region nation customer supplier part orders lineitem events "
@@ -140,9 +143,6 @@ def _footer_num_rows(path: str, spark: SparkSession | None = None) -> int:
     so it falls back to a Spark count — still footer-driven (parquet
     count(*) reads row-group metadata, not data pages), just executed by
     the cluster's filesystem connector instead of local pyarrow."""
-    import glob as _glob
-    import re as _re
-
     import pyarrow.parquet as _pq
 
     from tidb_lightning_spark.paths import file_uri_to_path
@@ -155,39 +155,31 @@ def _footer_num_rows(path: str, spark: SparkSession | None = None) -> int:
                 f"footer count"
             )
         return spark.read.parquet(path).count()
-    if os.path.isdir(path):
-        return sum(
-            _pq.ParquetFile(p).metadata.num_rows
-            for p in sorted(_glob.glob(os.path.join(path, "*.parquet")))
-        )
-    return _pq.ParquetFile(path).metadata.num_rows
+    return sum(
+        _pq.ParquetFile(p).metadata.num_rows
+        for p in local_parquet_files(path)
+    )
 
 
 def _footer_num_row_groups(path: str) -> int:
-    """Total parquet row-group count — file OR directory layout, driver-
-    side footer metadata only (the scan-parallelism cap widen() clamps
-    its byte-split estimate with). Local paths only; callers keep the
-    byte estimate for scheme'd URIs."""
-    import glob as _glob
-
+    """Total parquet row-group count — file OR directory layout, nested
+    (partitioned) directories included, driver-side footer metadata only
+    (the scan-parallelism cap widen() clamps its byte-split estimate
+    with). Local paths only; callers keep the byte estimate for scheme'd
+    URIs."""
     import pyarrow.parquet as _pq
 
-    if os.path.isdir(path):
-        return sum(
-            _pq.ParquetFile(p).metadata.num_row_groups
-            for p in sorted(_glob.glob(os.path.join(path, "*.parquet")))
-        ) or 1
-    return _pq.ParquetFile(path).metadata.num_row_groups or 1
+    return sum(
+        _pq.ParquetFile(p).metadata.num_row_groups
+        for p in local_parquet_files(path)
+    ) or 1
 
 
 def _first_parquet_batch(path: str, columns: list[str]):
     """One tiny record batch from the first part file (file or dir)."""
-    import glob as _glob
-
     import pyarrow.parquet as _pq
 
-    if os.path.isdir(path):
-        path = sorted(_glob.glob(os.path.join(path, "*.parquet")))[0]
+    path = local_parquet_files(path)[0]
     return next(_pq.ParquetFile(path).iter_batches(batch_size=1, columns=columns))
 
 

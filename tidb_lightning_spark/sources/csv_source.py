@@ -37,6 +37,8 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
+from tidb_lightning_spark.paths import is_remote
+
 
 @dataclass(frozen=True)
 class CSVConfig:
@@ -124,7 +126,7 @@ class _HadoopStream:
 
 
 def _decompress_open(path: str, spark=None):
-    if "://" in path and not path.startswith("file:"):
+    if is_remote(path):
         if path.endswith((".gz", ".xz", ".bz2", ".zst", ".zstd", ".lz4")):
             raise NotImplementedError(
                 f"driver-side peek of a COMPRESSED remote file {path!r} is "
@@ -289,10 +291,7 @@ def materialize_lz4(paths: list[str]) -> list[str]:
 
     if not any(p.endswith(".lz4") for p in paths):
         return paths
-    remote = [
-        p for p in paths
-        if p.endswith(".lz4") and "://" in p and not p.startswith("file:")
-    ]
+    remote = [p for p in paths if p.endswith(".lz4") and is_remote(p)]
     if remote:
         raise NotImplementedError(
             f"lz4 files on remote storage are not supported ({remote[0]!r}):"
@@ -468,7 +467,7 @@ def transcode_to_utf8(paths: list[str], charset: str) -> list[str]:
     """
     import codecs
 
-    remote = [p for p in paths if "://" in p and not p.startswith("file:")]
+    remote = [p for p in paths if is_remote(p)]
     if remote:
         raise NotImplementedError(
             f"legacy-charset files on remote storage are not supported "

@@ -16,20 +16,59 @@ trick as the reference's row-count fast path (parquet_parser.go:135-160).
 
 from __future__ import annotations
 
+import functools
 import glob
 import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from tidb_lightning_spark.paths import file_uri_to_path
+from tidb_lightning_spark.paths import file_uri_to_path, is_remote
+
+
+def local_parquet_files(path: str) -> list[str]:
+    """Part files of a local parquet table: the path itself when it is a
+    file, else every `*.parquet` under the directory, nested (partitioned)
+    layouts included, sorted. Directory listings are memoized per path
+    and mtime."""
+    lp = file_uri_to_path(path)
+    if not os.path.isdir(lp):
+        return [lp]
+    return list(_list_parts(lp, os.stat(lp).st_mtime_ns))
+
+
+@functools.lru_cache(maxsize=256)
+def _list_parts(path: str, mtime_ns: int) -> tuple[str, ...]:
+    return tuple(
+        sorted(glob.glob(os.path.join(path, "**", "*.parquet"), recursive=True))
+    )
+
+
+def _footer_schema(path: str):
+    """Arrow schema of the table's first part file (footer only), or None
+    when there is no readable part file. One read per file and mtime
+    serves both probes below."""
+    files = local_parquet_files(path)
+    try:
+        return _read_schema(files[0], os.stat(files[0]).st_mtime_ns)
+    except (IndexError, OSError):
+        return None
+
+
+@functools.lru_cache(maxsize=256)
+def _read_schema(path: str, mtime_ns: int):
+    import pyarrow.parquet as pq
+
+    try:
+        return pq.read_schema(path)
+    except Exception:
+        return None
 
 
 def _probe_nano_ts_columns(path: str) -> list[str]:
-    import pyarrow.parquet as pq
     import pyarrow.types as pt
 
-    if "://" in path and not path.startswith("file:"):
+    if is_remote(path):
         # pyarrow can't open scheme'd (s3a/viewfs/hdfs) paths here, so
         # the nano-timestamp probe is skipped — a remote table with
         # int64-nano columns would read them as raw longs. Warn loudly
@@ -45,20 +84,9 @@ def _probe_nano_ts_columns(path: str) -> list[str]:
             stacklevel=3,
         )
         return []
-    path = file_uri_to_path(path)
-    probe = path
-    if os.path.isdir(path):
-        files = sorted(glob.glob(os.path.join(path, "**", "*.parquet"), recursive=True))
-        if not files:
-            return []
-        probe = files[0]
-    try:
-        schema = pq.read_schema(probe)
-    except Exception:
-        return []
     return [
         f.name
-        for f in schema
+        for f in _footer_schema(path) or []
         if pt.is_timestamp(f.type) and f.type.unit == "ns"
     ]
 
@@ -67,36 +95,11 @@ def _probe_time_columns(path: str) -> list[str]:
     """Columns with a parquet TIME(MILLIS/MICROS) logical type — ILLEGAL
     for Spark's native reader ([PARQUET_TYPE_ILLEGAL]) but read by the
     reference as MySQL TIME strings (parquet_parser.go:333-343)."""
-    import pyarrow.parquet as pq
     import pyarrow.types as pt
 
-    if "://" in path and not path.startswith("file:"):
+    if is_remote(path):
         return []  # remote: native read raises PARQUET_TYPE_ILLEGAL itself
-    p = file_uri_to_path(path)
-    probe = p
-    if os.path.isdir(p):
-        files = sorted(glob.glob(os.path.join(p, "**", "*.parquet"), recursive=True))
-        if not files:
-            return []
-        probe = files[0]
-    try:
-        schema = pq.read_schema(probe)
-    except Exception:
-        return []
-    return [f.name for f in schema if pt.is_time(f.type)]
-
-
-def _expand_local_files(paths: list[str]) -> list[str]:
-    files: list[str] = []
-    for p in paths:
-        lp = file_uri_to_path(p)
-        if os.path.isdir(lp):
-            files.extend(
-                sorted(glob.glob(os.path.join(lp, "**", "*.parquet"), recursive=True))
-            )
-        else:
-            files.append(lp)
-    return files
+    return [f.name for f in _footer_schema(path) or [] if pt.is_time(f.type)]
 
 
 def _arrow_fallback_read(spark: SparkSession, paths: list[str]) -> DataFrame:
@@ -122,7 +125,7 @@ def _arrow_fallback_read(spark: SparkSession, paths: list[str]) -> DataFrame:
 
     from tidb_lightning_spark import _shipping
 
-    files = _expand_local_files(paths)
+    files = [f for p in paths for f in local_parquet_files(p)]
     if not files:
         return spark.read.parquet(*paths)  # let Spark raise its own error
     schema_arrow = pq.read_schema(files[0])

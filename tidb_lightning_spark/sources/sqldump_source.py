@@ -652,6 +652,19 @@ def decompressed_size(path: str) -> int:
     return n
 
 
+def file_bases(sizes: list[int], n_columns: int) -> tuple[list[int], int]:
+    """Row-id bases for consecutive dump files of `sizes` text bytes,
+    from 0 (region.go:252-286), and the number of ids they reserve. The
+    divisor is the readers' own (n_columns + 2): chunk bases inside a
+    file go up to size // divisor, so reserving less would let a split
+    file's sequence overrun the next file's base."""
+    bases, acc = [], 0
+    for size in sizes:
+        bases.append(acc)
+        acc += size // (n_columns + 2) + 1
+    return bases, acc
+
+
 def split_sql_file(path: str, chunk_bytes: int = SQL_CHUNK_BYTES) -> list[tuple[int, int]]:
     """Byte ranges of `path` aligned to statement starts (reference
     ReadChunks/SplitLargeFile semantics, parser.go:538-571,
@@ -691,30 +704,43 @@ def split_sql_file(path: str, chunk_bytes: int = SQL_CHUNK_BYTES) -> list[tuple[
     return list(zip(bounds, bounds[1:]))
 
 
+def _rows_schema(n_columns: int) -> T.StructType:
+    return T.StructType(
+        [T.StructField(f"_c{i}", T.StringType(), True) for i in range(n_columns)]
+        + [
+            T.StructField("_row_seq", T.LongType(), False),
+            T.StructField("_src_file", T.StringType(), False),
+        ]
+    )
+
+
 def read_sql_files(
     spark: SparkSession,
     paths: list[str],
     n_columns: int,
     encoding: str = "utf-8",
     chunk_bytes: int | None = None,  # None -> module SQL_CHUNK_BYTES
+    bases: list[int] | None = None,
 ) -> DataFrame:
     """paths -> DataFrame of `_c0.._cN` strings + `_row_seq` + `_src_file`.
 
     Large files are pre-split driver-side into statement-aligned byte
     ranges (one task per range — a multi-GiB dump is no longer one task
     holding the whole file in memory); each task reads ONLY its range.
-    `_row_seq` is the chunk's pre-allocated row-id base (range_start //
+    `_row_seq` is the file's base (`bases[i]` for `paths[i]`, default 0)
+    plus the chunk's pre-allocated row-id base (range_start //
     (n_columns + 2), the reference's bytes-per-row lower bound,
     region.go:208-225) plus the in-chunk row index: unique and
     deterministic within the file regardless of how it was split, and
-    bounded by file_size // divisor so per-file bases never collide.
+    bounded by file_size // divisor, so bases from `file_bases` keep the
+    files' sequences disjoint.
 
     All statements in a group must agree on column-list arity with
     `n_columns` (the caller derives it from peek_columns / table schema).
     """
     divisor = n_columns + 2
     ranges: list[tuple[str, int, int, int]] = []
-    for p in paths:
+    for p, fbase in zip(paths, bases or [0] * len(paths)):
         ap = os.path.abspath(p)
         cb = chunk_bytes
         if cb is None:
@@ -723,15 +749,7 @@ def read_sql_files(
             except OSError:
                 cb = SQL_CHUNK_BYTES
         for start, end in split_sql_file(ap, cb):
-            ranges.append((ap, start, end, start // divisor))
-
-    out_schema = T.StructType(
-        [T.StructField(f"_c{i}", T.StringType(), True) for i in range(n_columns)]
-        + [
-            T.StructField("_row_seq", T.LongType(), False),
-            T.StructField("_src_file", T.StringType(), False),
-        ]
-    )
+            ranges.append((ap, start, end, fbase + start // divisor))
 
     from tidb_lightning_spark._shipping import ensure_shipped
 
@@ -767,7 +785,7 @@ def read_sql_files(
     # text per chunk for nothing (guide §4: shrink the Python boundary).
     # The scanner fallback tiers still build rows in Python; they
     # convert once, straight to Arrow.
-    return rdf.mapInArrow(parse_batches, schema=out_schema)
+    return rdf.mapInArrow(parse_batches, schema=_rows_schema(n_columns))
 
 
 # --------------------------------------------------------------------------
@@ -782,8 +800,9 @@ def read_sql_files(
 # to the existing tiers for the WHOLE chunk, so outputs — including error
 # surfaces — remain those of the fuzz-tested scanner. All-or-nothing per
 # chunk: nothing is yielded until the full chunk parses AND validates, so
-# a bail can never duplicate rows.
-_SQL_VECTOR = os.environ.get("TLS_SQL_VECTOR", "1") != "0"
+# a bail can never duplicate rows. Tests flip _SQL_VECTOR to compare the
+# tiers.
+_SQL_VECTOR = True
 # gap between statements: whitespace and terminated comments, exactly the
 # set _Scanner.skip_ws_comments consumes (an UNTERMINATED /* stays
 # unconsumed -> the caller bails so the scanner can raise)
@@ -1050,21 +1069,8 @@ REMOTE_SQL_MAX_BYTES = int(
 )
 
 
-def _remote_out_schema(n_columns: int) -> T.StructType:
-    return T.StructType(
-        [
-            T.StructField(f"_c{i}", T.StringType(), True)
-            for i in range(n_columns)
-        ]
-        + [
-            T.StructField("_row_seq", T.LongType(), False),
-            T.StructField("_src_file", T.StringType(), False),
-        ]
-    )
-
-
 def _read_sql_file_ranged(
-    spark: SparkSession, path: str, n_columns: int, length: int
+    spark: SparkSession, path: str, n_columns: int, length: int, base: int
 ) -> DataFrame:
     """One OVERSIZED remote dump file -> rows, with statement-aligned
     byte-range splitting done by the JVM connector itself: Hadoop
@@ -1074,10 +1080,11 @@ def _read_sql_file_ranged(
     statement's text, the LineRecordReader reads past its split boundary
     to finish its last record and skips the partial first one (the same
     contract the local splitter implements by hand, region.go analog),
-    and the record KEY is the statement's byte offset. Row ids:
-    offset // (n_columns + 2) is the statement's base — statements never
-    overlap byte ranges, so bases never collide (the identical
-    bytes-per-row bound as the local chunk splitter, region.go:208-225).
+    and the record KEY is the statement's byte offset. Row ids: the
+    file's `base` + offset // (n_columns + 2) is the statement's base —
+    statements never overlap byte ranges, so bases never collide (the
+    identical bytes-per-row bound as the local chunk splitter,
+    region.go:208-225).
 
     This retires the r9 whole-file cap for utf-8 dumps: no single Arrow
     cell ever holds the file; peak task memory is one statement
@@ -1107,12 +1114,12 @@ def _read_sql_file_ranged(
                 # the delimiter strips the terminating ';' — the scanner
                 # treats it as optional at EOF, so no re-append needed
                 yield from _row_batches(
-                    stmt, n_columns, int(off) // divisor, path
+                    stmt, n_columns, base + int(off) // divisor, path
                 )
 
     # mapInArrow for the same reason as read_sql_files: tier-0 output is
     # already Arrow; the pandas hop double-copied every string cell
-    return sdf.mapInArrow(parse_batches, schema=_remote_out_schema(n_columns))
+    return sdf.mapInArrow(parse_batches, schema=_rows_schema(n_columns))
 
 
 def read_sql_files_remote(
@@ -1120,10 +1127,10 @@ def read_sql_files_remote(
     paths: list[str],
     n_columns: int,
     encoding: str = "utf-8",
-) -> tuple[DataFrame, dict[str, int]]:
+) -> tuple[DataFrame, int]:
     """Scheme'd (s3a://, viewfs://, hdfs://...) SQL dumps -> the same
     `_c0.._cN` + `_row_seq` + `_src_file` frame as `read_sql_files`, plus
-    {observed_path: byte_size} for the caller's row-id base reservation.
+    the number of row ids its files reserve.
 
     Files up to REMOTE_SQL_MAX_BYTES come through Spark's `binaryFile`
     source — the SAME Hadoop connector the CSV/parquet executor scans use
@@ -1139,18 +1146,17 @@ def read_sql_files_remote(
     also never splits .sql mid-file (region.go:131-234) — the ranged
     path is strictly more parallel than both.
 
-    Row ids: whole files are one chunk with in-file base 0; ranged files
-    reserve per-statement bases from byte offsets — both bounded by
-    size // (n_cols+2), so the caller's per-file reservation is
-    unchanged."""
+    Row ids: only this reader sees the sizes the store reports, so it
+    reserves the per-file bases itself (`file_bases` over the observed
+    paths in sorted order, from 0) and folds them into `_row_seq`. Whole
+    files are one chunk; ranged files reserve per-statement bases from
+    byte offsets — both bounded by size // (n_cols+2)."""
     bdf = spark.read.format("binaryFile").load(paths)
     # column-pruned to file status only — no content read for the guard
-    meta = bdf.select("path", "length").collect()
-    big = sorted(
-        (r["path"], r["length"])
-        for r in meta
-        if r["length"] > REMOTE_SQL_MAX_BYTES
+    files = sorted(
+        (r["path"], r["length"]) for r in bdf.select("path", "length").collect()
     )
+    big = [(p, n) for p, n in files if n > REMOTE_SQL_MAX_BYTES]
     if big and encoding.lower().replace("-", "") not in ("utf8", "ascii"):
         raise SQLDumpError(
             f"remote SQL dump file(s) in charset {encoding!r} exceed "
@@ -1161,6 +1167,9 @@ def read_sql_files_remote(
             "to local/shared storage, where the statement-aligned range "
             "splitter handles any size and charset."
         )
+
+    starts, reserved = file_bases([n for _, n in files], n_columns)
+    bases = {p: b for (p, _), b in zip(files, starts)}
 
     from tidb_lightning_spark._shipping import ensure_shipped
 
@@ -1177,12 +1186,11 @@ def read_sql_files_remote(
                 text = str(
                     content_col[i].as_buffer(), encoding, "replace"
                 )
-                yield from _row_batches(
-                    text, n_columns, 0, paths_col[i].as_py()
-                )
+                path = paths_col[i].as_py()
+                yield from _row_batches(text, n_columns, bases[path], path)
 
     parts: list[DataFrame] = []
-    if len(big) < len(meta):
+    if len(big) < len(files):
         small = bdf
         if big:
             # binaryFile pushes length predicates down to the file
@@ -1190,12 +1198,12 @@ def read_sql_files_remote(
             small = bdf.filter(F.col("length") <= REMOTE_SQL_MAX_BYTES)
         parts.append(
             small.select("path", "content").mapInArrow(
-                parse_batches, schema=_remote_out_schema(n_columns)
+                parse_batches, schema=_rows_schema(n_columns)
             )
         )
     for p, ln in big:
-        parts.append(_read_sql_file_ranged(spark, p, n_columns, ln))
+        parts.append(_read_sql_file_ranged(spark, p, n_columns, ln, bases[p]))
     out = parts[0]
     for extra in parts[1:]:
         out = out.unionByName(extra)
-    return out, {r["path"]: r["length"] for r in meta}
+    return out, reserved
