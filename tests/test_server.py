@@ -273,6 +273,21 @@ def test_progress_tables_lists_all(server, tmp_path):
     assert "/progress/tables" in page
 
 
+def test_progress_tables_skips_task_record(server, tmp_path):
+    """A running import keeps its task record (pinned timestamp) in the
+    same store; /progress/tables lists tables only."""
+    from tidb_lightning_spark.checkpoints import CheckpointStore
+
+    base, *_ = server
+    store = CheckpointStore(str(tmp_path / "_tls_checkpoints.json"))
+    store.update("__task__", "__meta__", "loaded", pinned_ts="2020-01-01")
+    store.update("mydb", "people", "imported", rows=7)
+    _, body = _req(base, "/progress/tables")
+    assert json.loads(body) == {
+        "mydb.people": {"status": "imported", "rows": 7}
+    }
+
+
 # ---------------------------------------------------------------------------
 # configlist_test.go + lightning.go PATCH/DELETE mining (r12)
 # ---------------------------------------------------------------------------

@@ -265,6 +265,39 @@ def test_stream_restore_incremental(spark, tmp_path):
     assert len(batches) >= 2
 
 
+def test_stream_restore_csv_empty_field_is_not_null(spark, tmp_path):
+    """The stream reads CSV fields like the batch reader (MySQL
+    semantics, csv_parser.go:108-117): an empty unquoted field is '',
+    only the null text is NULL, a quoted empty string is ''."""
+    from tidb_lightning_spark.schema.ddl import parse_create_table
+    from tidb_lightning_spark.sources.csv_source import (
+        CSVConfig,
+        read_csv_files,
+    )
+    from tidb_lightning_spark.streaming.ingest import stream_restore
+
+    info = parse_create_table(
+        "CREATE TABLE t (a INT PRIMARY KEY, b VARCHAR(10), c VARCHAR(10));"
+    )
+    src = tmp_path / "incoming"
+    src.mkdir()
+    (src / "d.t.000.csv").write_text('a,b,c\n1,,x\n2,\\N,""\n')
+    table_dir = str(tmp_path / "wh" / "d" / "t")
+    stream_restore(
+        spark, f"{src}/d.t.*.csv", table_dir, str(tmp_path / "ckpt"), info,
+        csv=CSVConfig(), file_columns=["a", "b", "c"],
+    )
+    got = sorted(
+        (r["a"], r["b"], r["c"]) for r in spark.read.parquet(table_dir).collect()
+    )
+    assert got == [(1, "", "x"), (2, None, "")]
+
+    batch, _ = read_csv_files(spark, [str(src / "d.t.000.csv")], CSVConfig())
+    assert sorted(tuple(r) for r in batch.collect()) == [
+        ("1", "", "x"), ("2", None, ""),
+    ]
+
+
 def test_cli_stream_continuous_restore(spark, tmp_path, capsys):
     """`cli stream`: drain a growing dump dir incrementally; warehouse
     readable via `cli sql` between drains."""

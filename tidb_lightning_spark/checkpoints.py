@@ -1,24 +1,37 @@
 """Checkpoint store (reference: lightning/checkpoints/checkpoints.go).
 
-The reference's 4-level protobuf/MySQL checkpoint machine collapses to a
-per-table JSON state file because our commit unit is a whole table (the
-files sink stages+renames atomically): statuses mirror
-checkpoints.go:43-56 so `ctl` output reads the same.
+One record per table, keyed `` `db`.`tbl` ``; statuses mirror
+checkpoints.go:43-56 so `ctl` output reads the same:
 
     loaded(30) -> all_written(60) -> closed(90) -> imported(120) ->
     altered_auto_inc(150) -> checksummed(180) -> analyzed(210)
 
-Updates are atomic (write-temp + rename) and idempotent; a re-run skips
-tables at >= imported with a matching source signature and re-runs
-anything earlier — the exactly-once semantics the kill-and-resume tests
-pin (FIXTURES.md F12).
+The commit unit is an engine (a deterministic group of a table's source
+files, pipeline._plan_engines; the reference resumes per chunk too,
+tests/checkpoint_chunks), recorded as a per-engine sub-record. A
+re-run skips tables at the skip status with a matching source signature
+and engines committed with a matching engine signature, and re-runs
+anything earlier (exactly-once resume, FIXTURES.md F12).
+
+The record logic is written once, in `CheckpointStore`. Each driver
+supplies four storage primitives over key -> record: `_load(key)`,
+`_rmw(key, mutate)` (atomic read-modify-write; `mutate` returning False
+skips the write), `_delete(key | None) -> count` and `_items()`. Drivers:
+`CheckpointStore` (one JSON file, write-temp + rename; `enabled=False`
+makes it the in-memory store every driver gets with checkpoints off),
+`SQLiteCheckpointStore` (safe under concurrent processes) and
+`JDBCCheckpointStore` (in the target DB: resume survives losing the
+driver machine).
 """
 
 from __future__ import annotations
 
+import contextlib
+import copy
 import json
 import os
 import tempfile
+import threading
 import time
 
 STATUS = {
@@ -31,20 +44,21 @@ STATUS = {
     "analyzed": 210,
 }
 
-
 class CheckpointStore:
-    def __init__(self, path: str, enabled: bool = True):
-        import threading
+    """JSON-file driver. Also the in-memory store (`enabled=False`):
+    records live for the run and nothing touches the disk."""
 
+    def __init__(self, path: str, enabled: bool = True):
         self.path = path
         self.enabled = enabled
-        # in-process mutual exclusion for table-concurrency > 1 (the
-        # SQLite driver additionally serializes across processes)
+        # serializes in-process writers (table-concurrency > 1)
         self._lock = threading.RLock()
-        self._data: dict = {"version": 1, "tables": {}}
+        self._tables: dict = {}
         if enabled and os.path.exists(path):
             with open(path) as f:
-                self._data = json.load(f)
+                data = json.load(f)
+            # a hand-written flat {key: rec} file has no wrapper
+            self._tables = data.get("tables", data)
 
     def _save(self) -> None:
         if not self.enabled:
@@ -52,28 +66,52 @@ class CheckpointStore:
         os.makedirs(os.path.dirname(self.path) or ".", exist_ok=True)
         fd, tmp = tempfile.mkstemp(dir=os.path.dirname(self.path) or ".")
         with os.fdopen(fd, "w") as f:
-            json.dump(self._data, f, indent=2)
+            json.dump({"version": 1, "tables": self._tables}, f, indent=2)
         os.replace(tmp, self.path)
 
+    # -- storage primitives --------------------------------------------
+    def _load(self, key: str) -> dict:
+        with self._lock:
+            return copy.deepcopy(self._tables.get(key, {}))
+
+    def _rmw(self, key: str, mutate) -> None:
+        with self._lock:
+            rec = self._load(key)
+            if mutate(rec) is False:
+                return
+            self._tables[key] = rec
+            self._save()
+
+    def _delete(self, key: str | None) -> int:
+        with self._lock:
+            keys = list(self._tables) if key is None else [key]
+            n = sum(self._tables.pop(k, None) is not None for k in keys)
+            self._save()
+            return n
+
+    def _items(self) -> dict:
+        with self._lock:
+            return copy.deepcopy(self._tables)
+
+    # -- record logic (every driver) -----------------------------------
     @staticmethod
     def table_key(db: str, table: str) -> str:
         return f"`{db}`.`{table}`"
 
     def get(self, db: str, table: str) -> dict:
-        return self._data["tables"].get(self.table_key(db, table), {})
+        return self._load(self.table_key(db, table))
 
     def status(self, db: str, table: str) -> int:
         return self.get(db, table).get("status", 0)
 
     def update(self, db: str, table: str, status: str, **fields) -> None:
-        with self._lock:
-            key = self.table_key(db, table)
-            rec = self._data["tables"].setdefault(key, {})
+        def mutate(rec):
             rec["status"] = STATUS[status]
             rec["status_name"] = status
             rec["updated_at"] = time.strftime("%Y-%m-%d %H:%M:%S")
             rec.update(fields)
-            self._save()
+
+        self._rmw(self.table_key(db, table), mutate)
 
     def source_signature(self, data_files) -> str:
         """Change-detection key: (path, size) of every input file."""
@@ -103,11 +141,6 @@ class CheckpointStore:
             and rec.get("signature") == signature
         )
 
-    # ----- engine-level (chunk) records -------------------------------
-    # The reference resumes per chunk/engine (checkpoints.go:43-56,
-    # tests/checkpoint_chunks); our engine = a deterministic group of a
-    # table's source files, committed independently (pipeline._plan_engines).
-
     def engine_done(self, db: str, table: str, engine: int, esig: str) -> bool:
         rec = self.get(db, table)
         e = rec.get("engines", {}).get(str(engine))
@@ -116,35 +149,38 @@ class CheckpointStore:
     def engine_update(
         self, db: str, table: str, engine: int, status: str, **fields
     ) -> None:
-        with self._lock:
-            key = self.table_key(db, table)
-            rec = self._data["tables"].setdefault(key, {})
+        def mutate(rec):
             e = rec.setdefault("engines", {}).setdefault(str(engine), {})
             e["status"] = status
             e["updated_at"] = time.strftime("%Y-%m-%d %H:%M:%S")
             e.update(fields)
-            self._save()
+
+        self._rmw(self.table_key(db, table), mutate)
 
     def clear_engines(self, db: str, table: str) -> None:
-        with self._lock:
-            rec = self._data["tables"].get(self.table_key(db, table))
-            if rec and rec.pop("engines", None) is not None:
-                self._save()
+        self._rmw(
+            self.table_key(db, table),
+            lambda rec: rec.pop("engines", None) is not None,
+        )
 
     def remove(self, db: str | None = None, table: str | None = None) -> int:
-        with self._lock:
-            if db is None:
-                n = len(self._data["tables"])
-                self._data["tables"] = {}
-            else:
-                key = self.table_key(db, table)
-                n = 1 if key in self._data["tables"] else 0
-                self._data["tables"].pop(key, None)
-            self._save()
-            return n
+        return self._delete(None if db is None else self.table_key(db, table))
 
     def dump(self) -> dict:
-        return self._data
+        return {"version": 1, "tables": self._items()}
+
+    def tables(self) -> list[tuple[str, str, dict]]:
+        """Snapshot of the table records as (db, table, rec), without the
+        task record. Also reads plain `db.tbl` keys (hand-written files)."""
+        out = []
+        for key, rec in self._items().items():
+            if key.startswith("`"):
+                db, tbl = key[1:-1].split("`.`", 1)
+            else:
+                db, _, tbl = key.partition(".")
+            if db != "__task__":  # the run's pinned-timestamp record
+                out.append((db, tbl, rec))
+        return out
 
 
 class SQLiteCheckpointStore(CheckpointStore):
@@ -157,49 +193,40 @@ class SQLiteCheckpointStore(CheckpointStore):
     same warehouse — see consistent state instead of clobbering a shared
     JSON file. WAL mode keeps readers unblocked during updates."""
 
-    def __init__(self, path: str, enabled: bool = True):
+    def __init__(self, path: str):
         self.path = path
-        self.enabled = enabled
-        if enabled:
-            with self._conn() as con:
-                con.execute(
-                    "CREATE TABLE IF NOT EXISTS checkpoints ("
-                    " key TEXT PRIMARY KEY, rec TEXT NOT NULL)"
-                )
+        with self._conn() as con:
+            con.execute(
+                "CREATE TABLE IF NOT EXISTS checkpoints ("
+                " key TEXT PRIMARY KEY, rec TEXT NOT NULL)"
+            )
 
+    @contextlib.contextmanager
     def _conn(self):
+        """One transaction (committed unless it raises), then close."""
         import sqlite3
 
         os.makedirs(os.path.dirname(self.path) or ".", exist_ok=True)
         con = sqlite3.connect(self.path, timeout=30.0)
-        con.execute("PRAGMA journal_mode=WAL")
-        return con
+        try:
+            con.execute("PRAGMA journal_mode=WAL")
+            with con:
+                yield con
+        finally:
+            con.close()
 
-    # -- storage primitives (everything else inherits) ------------------
-    def get(self, db: str, table: str) -> dict:
-        if not self.enabled:
-            return {}
+    def _load(self, key: str) -> dict:
         with self._conn() as con:
             row = con.execute(
-                "SELECT rec FROM checkpoints WHERE key = ?",
-                (self.table_key(db, table),),
+                "SELECT rec FROM checkpoints WHERE key = ?", (key,)
             ).fetchone()
         return json.loads(row[0]) if row else {}
-
-    def _put(self, key: str, rec: dict) -> None:
-        with self._conn() as con:
-            con.execute(
-                "INSERT INTO checkpoints (key, rec) VALUES (?, ?) "
-                "ON CONFLICT(key) DO UPDATE SET rec = excluded.rec",
-                (key, json.dumps(rec)),
-            )
 
     def _rmw(self, key: str, mutate) -> None:
         """Read-modify-write under ONE write transaction (BEGIN IMMEDIATE
         takes the write lock before the read), so a concurrent server-mode
         import and a ctl process cannot interleave get()/put() and lose
-        engine records. `mutate(rec) -> bool|None`: return False to skip
-        the write."""
+        engine records."""
         with self._conn() as con:
             con.execute("BEGIN IMMEDIATE")
             row = con.execute(
@@ -214,65 +241,15 @@ class SQLiteCheckpointStore(CheckpointStore):
                 (key, json.dumps(rec)),
             )
 
-    def update(self, db: str, table: str, status: str, **fields) -> None:
-        if not self.enabled:
-            return
-
-        def mutate(rec):
-            rec["status"] = STATUS[status]
-            rec["status_name"] = status
-            rec["updated_at"] = time.strftime("%Y-%m-%d %H:%M:%S")
-            rec.update(fields)
-
-        self._rmw(self.table_key(db, table), mutate)
-
-    def engine_update(
-        self, db: str, table: str, engine: int, status: str, **fields
-    ) -> None:
-        if not self.enabled:
-            return
-
-        def mutate(rec):
-            e = rec.setdefault("engines", {}).setdefault(str(engine), {})
-            e["status"] = status
-            e["updated_at"] = time.strftime("%Y-%m-%d %H:%M:%S")
-            e.update(fields)
-
-        self._rmw(self.table_key(db, table), mutate)
-
-    def clear_engines(self, db: str, table: str) -> None:
-        if not self.enabled:
-            return
-
-        def mutate(rec):
-            return rec.pop("engines", None) is not None
-
-        self._rmw(self.table_key(db, table), mutate)
-
-    def remove(self, db: str | None = None, table: str | None = None) -> int:
-        if not self.enabled:
-            return 0
+    def _delete(self, key: str | None) -> int:
+        where, args = ("", ()) if key is None else (" WHERE key = ?", (key,))
         with self._conn() as con:
-            if db is None:
-                n = con.execute("SELECT count(*) FROM checkpoints").fetchone()[0]
-                con.execute("DELETE FROM checkpoints")
-            else:
-                cur = con.execute(
-                    "DELETE FROM checkpoints WHERE key = ?",
-                    (self.table_key(db, table),),
-                )
-                n = cur.rowcount
-        return n
+            return con.execute("DELETE FROM checkpoints" + where, args).rowcount
 
-    def dump(self) -> dict:
-        if not self.enabled:
-            return {"version": 1, "tables": {}}
+    def _items(self) -> dict:
         with self._conn() as con:
             rows = con.execute("SELECT key, rec FROM checkpoints").fetchall()
-        return {
-            "version": 1,
-            "tables": {k: json.loads(r) for k, r in rows},
-        }
+        return {k: json.loads(r) for k, r in rows}
 
 
 class JDBCCheckpointStore(CheckpointStore):
@@ -289,19 +266,14 @@ class JDBCCheckpointStore(CheckpointStore):
 
     SCHEMA = "lightning_checkpoints"  # reference default checkpoint schema
 
-    def __init__(self, spark, url: str, properties: dict | None = None,
-                 enabled: bool = True):
-        import threading
-
+    def __init__(self, spark, url: str, properties: dict | None = None):
         self.spark = spark
         self.url = url
         self.properties = dict(properties or {})
-        self.enabled = enabled
         self.path = f"{url} [{self.SCHEMA}.checkpoint]"  # ctl display
         self.dialect = "derby" if url.startswith("jdbc:derby") else "mysql"
         self._lock = threading.RLock()
-        if enabled:
-            self._init_table()
+        self._init_table()
 
     def _conn(self):
         from tidb_lightning_spark.sinks.jdbc_sink import _jdbc_connection
@@ -311,176 +283,78 @@ class JDBCCheckpointStore(CheckpointStore):
     def _init_table(self) -> None:
         from tidb_lightning_spark.sinks.jdbc_sink import execute_ddl
 
+        t = f"{self.SCHEMA}.checkpoint"
         if self.dialect == "mysql":
-            execute_ddl(
-                self.spark, self.url,
+            ddl = [
                 f"CREATE DATABASE IF NOT EXISTS {self.SCHEMA}",
-                self.properties,
-            )
-            execute_ddl(
-                self.spark, self.url,
-                f"CREATE TABLE IF NOT EXISTS {self.SCHEMA}.checkpoint ("
-                " k VARCHAR(191) NOT NULL PRIMARY KEY,"
-                " rec LONGTEXT NOT NULL)",
-                self.properties,
-            )
+                f"CREATE TABLE IF NOT EXISTS {t} (k VARCHAR(191) NOT NULL"
+                " PRIMARY KEY, rec LONGTEXT NOT NULL)",
+            ]
         else:  # derby creates the schema implicitly on CREATE TABLE
+            ddl = [
+                f'CREATE TABLE {t} ("k" VARCHAR(512) NOT NULL PRIMARY KEY,'
+                ' "rec" CLOB NOT NULL)'
+            ]
+        for sql in ddl:
             execute_ddl(
-                self.spark, self.url,
-                f"CREATE TABLE {self.SCHEMA}.checkpoint ("
-                ' "k" VARCHAR(512) NOT NULL PRIMARY KEY,'
-                ' "rec" CLOB NOT NULL)',
-                self.properties,
-                ignore_exists=True,
+                self.spark, self.url, sql, self.properties, ignore_exists=True
             )
 
-    def _q(self, ident: str) -> str:
-        return f"`{ident}`" if self.dialect == "mysql" else f'"{ident}"'
-
-    # -- storage primitives (everything else inherits) ------------------
-    def get(self, db: str, table: str) -> dict:
-        if not self.enabled:
-            return {}
-        sql = (
-            f"SELECT {self._q('rec')} FROM {self.SCHEMA}.checkpoint "
-            f"WHERE {self._q('k')} = ?"
-        )
-        with self._conn() as conn:
-            ps = conn.prepareStatement(sql)
+    def _sql(self, conn, template: str, *args: str):
+        """One prepared statement over `{t}` / `{k}` / `{rec}` (the table
+        and its quoted columns) with string parameters: a query returns
+        its rows as tuples of strings, anything else its update count."""
+        q = "`{}`" if self.dialect == "mysql" else '"{}"'
+        ps = conn.prepareStatement(template.format(
+            t=f"{self.SCHEMA}.checkpoint", k=q.format("k"), rec=q.format("rec"),
+        ))
+        try:
+            for i, arg in enumerate(args, 1):
+                ps.setString(i, arg)
+            if not ps.execute():
+                return int(ps.getUpdateCount())
+            rs = ps.getResultSet()
             try:
-                ps.setString(1, self.table_key(db, table))
-                rs = ps.executeQuery()
-                try:
-                    if rs.next():
-                        return json.loads(rs.getString(1))
-                    return {}
-                finally:
-                    rs.close()
+                n = rs.getMetaData().getColumnCount()
+                rows = []
+                while rs.next():
+                    rows.append(tuple(rs.getString(c) for c in range(1, n + 1)))
+                return rows
             finally:
-                ps.close()
+                rs.close()
+        finally:
+            ps.close()
+
+    def _load(self, key: str) -> dict:
+        with self._conn() as conn:
+            rows = self._sql(conn, "SELECT {rec} FROM {t} WHERE {k} = ?", key)
+        return json.loads(rows[0][0]) if rows else {}
 
     def _rmw(self, key: str, mutate) -> None:
         """Read-modify-write; in-process serialization via the RLock,
         UPDATE-else-INSERT upsert (portable across derby/mysql)."""
         with self._lock, self._conn() as conn:
-            ps = conn.prepareStatement(
-                f"SELECT {self._q('rec')} FROM {self.SCHEMA}.checkpoint "
-                f"WHERE {self._q('k')} = ?"
-            )
-            try:
-                ps.setString(1, key)
-                rs = ps.executeQuery()
-                try:
-                    rec = json.loads(rs.getString(1)) if rs.next() else {}
-                finally:
-                    rs.close()
-            finally:
-                ps.close()
+            rows = self._sql(conn, "SELECT {rec} FROM {t} WHERE {k} = ?", key)
+            rec = json.loads(rows[0][0]) if rows else {}
             if mutate(rec) is False:
                 return
-            up = conn.prepareStatement(
-                f"UPDATE {self.SCHEMA}.checkpoint SET {self._q('rec')} = ? "
-                f"WHERE {self._q('k')} = ?"
-            )
-            try:
-                up.setString(1, json.dumps(rec))
-                up.setString(2, key)
-                n = up.executeUpdate()
-            finally:
-                up.close()
-            if n == 0:
-                ins = conn.prepareStatement(
-                    f"INSERT INTO {self.SCHEMA}.checkpoint "
-                    f"({self._q('k')}, {self._q('rec')}) VALUES (?, ?)"
+            body = json.dumps(rec)
+            if not self._sql(
+                conn, "UPDATE {t} SET {rec} = ? WHERE {k} = ?", body, key
+            ):
+                self._sql(
+                    conn, "INSERT INTO {t} ({k}, {rec}) VALUES (?, ?)", key, body
                 )
-                try:
-                    ins.setString(1, key)
-                    ins.setString(2, json.dumps(rec))
-                    ins.executeUpdate()
-                finally:
-                    ins.close()
 
-    def update(self, db: str, table: str, status: str, **fields) -> None:
-        if not self.enabled:
-            return
-
-        def mutate(rec):
-            rec["status"] = STATUS[status]
-            rec["status_name"] = status
-            rec["updated_at"] = time.strftime("%Y-%m-%d %H:%M:%S")
-            rec.update(fields)
-
-        self._rmw(self.table_key(db, table), mutate)
-
-    def engine_update(
-        self, db: str, table: str, engine: int, status: str, **fields
-    ) -> None:
-        if not self.enabled:
-            return
-
-        def mutate(rec):
-            e = rec.setdefault("engines", {}).setdefault(str(engine), {})
-            e["status"] = status
-            e["updated_at"] = time.strftime("%Y-%m-%d %H:%M:%S")
-            e.update(fields)
-
-        self._rmw(self.table_key(db, table), mutate)
-
-    def clear_engines(self, db: str, table: str) -> None:
-        if not self.enabled:
-            return
-
-        def mutate(rec):
-            return rec.pop("engines", None) is not None
-
-        self._rmw(self.table_key(db, table), mutate)
-
-    def remove(self, db: str | None = None, table: str | None = None) -> int:
-        if not self.enabled:
-            return 0
+    def _delete(self, key: str | None) -> int:
+        where, args = ("", ()) if key is None else (" WHERE {k} = ?", (key,))
         with self._lock, self._conn() as conn:
-            st = conn.createStatement()
-            try:
-                if db is None:
-                    rs = st.executeQuery(
-                        f"SELECT COUNT(*) FROM {self.SCHEMA}.checkpoint"
-                    )
-                    rs.next()
-                    n = int(rs.getLong(1))
-                    rs.close()
-                    st.execute(f"DELETE FROM {self.SCHEMA}.checkpoint")
-                    return n
-            finally:
-                st.close()
-            ps = conn.prepareStatement(
-                f"DELETE FROM {self.SCHEMA}.checkpoint "
-                f"WHERE {self._q('k')} = ?"
-            )
-            try:
-                ps.setString(1, self.table_key(db, table))
-                return int(ps.executeUpdate())
-            finally:
-                ps.close()
+            return self._sql(conn, "DELETE FROM {t}" + where, *args)
 
-    def dump(self) -> dict:
-        if not self.enabled:
-            return {"version": 1, "tables": {}}
+    def _items(self) -> dict:
         with self._conn() as conn:
-            st = conn.createStatement()
-            try:
-                rs = st.executeQuery(
-                    f"SELECT {self._q('k')}, {self._q('rec')} "
-                    f"FROM {self.SCHEMA}.checkpoint"
-                )
-                tables = {}
-                try:
-                    while rs.next():
-                        tables[rs.getString(1)] = json.loads(rs.getString(2))
-                finally:
-                    rs.close()
-            finally:
-                st.close()
-        return {"version": 1, "tables": tables}
+            rows = self._sql(conn, "SELECT {k}, {rec} FROM {t}")
+        return {k: json.loads(r) for k, r in rows}
 
 
 def open_checkpoint_store(
@@ -495,26 +369,28 @@ def open_checkpoint_store(
     (file / mysql -> here: file / sqlite / jdbc-in-target). Auto-detects
     an existing local store of either flavor so `ctl` works regardless
     of how the import ran; the jdbc driver needs the live session and
-    target URL and is only reachable by explicit configuration."""
+    target URL and is only reachable by explicit configuration. With
+    `enabled=False` every driver gets the in-memory store: in-run reads
+    still see this run's records, and no file or table is created."""
+    if driver not in ("file", "sqlite", "jdbc", "auto"):
+        raise ValueError(
+            f"unknown checkpoint driver {driver!r} (file|sqlite|jdbc|auto)"
+        )
+    jpath = os.path.join(target_dir, "_tls_checkpoints.json")
+    spath = os.path.join(target_dir, "_tls_checkpoints.sqlite")
+    if not enabled:
+        return CheckpointStore(jpath, enabled=False)
     if driver == "jdbc":
         if spark is None or not jdbc_url:
             raise ValueError(
                 "checkpoint driver 'jdbc' needs a SparkSession and a "
                 "jdbc-url (checkpoints live in the target database)"
             )
-        return JDBCCheckpointStore(
-            spark, jdbc_url, jdbc_properties, enabled=enabled
-        )
-    jpath = os.path.join(target_dir, "_tls_checkpoints.json")
-    spath = os.path.join(target_dir, "_tls_checkpoints.sqlite")
+        return JDBCCheckpointStore(spark, jdbc_url, jdbc_properties)
     if driver == "auto":
         driver = "sqlite" if (
             os.path.exists(spath) and not os.path.exists(jpath)
         ) else "file"
     if driver == "sqlite":
-        return SQLiteCheckpointStore(spath, enabled=enabled)
-    if driver == "file":
-        return CheckpointStore(jpath, enabled=enabled)
-    raise ValueError(
-        f"unknown checkpoint driver {driver!r} (file|sqlite|jdbc|auto)"
-    )
+        return SQLiteCheckpointStore(spath)
+    return CheckpointStore(jpath)

@@ -685,10 +685,7 @@ def _ctl(args) -> int:
 
         sel = args.checkpoint_error_destroy
         destroyed = 0
-        for key, rec in list(store.dump()["tables"].items()):
-            db, tbl = key.strip("`").split("`.`")
-            if db == "__task__":
-                continue  # task metadata (pinned timestamp), not a table
+        for db, tbl, rec in store.tables():
             if sel != "all" and f"{db}.{tbl}" != sel:
                 continue
             # destroy only tables that did NOT finish (reference
@@ -707,10 +704,7 @@ def _ctl(args) -> int:
 
         sel = args.checkpoint_error_ignore
         lifted = 0
-        for key, rec in list(store.dump()["tables"].items()):
-            db, tbl = key.strip("`").split("`.`")
-            if db == "__task__":
-                continue  # task metadata (pinned timestamp), not a table
+        for db, tbl, rec in store.tables():
             if sel != "all" and f"{db}.{tbl}" != sel:
                 continue
             # 'closed' is the post-import downgrade a required-checksum

@@ -512,15 +512,14 @@ class Restorer:
                 _verify_task_checkpoint(cfg, task_rec)
         else:
             self.pinned_ts = time.strftime("%Y-%m-%d %H:%M:%S")
-            if cfg.checkpoint_enable:
-                from tidb_lightning_spark import __version__
+            from tidb_lightning_spark import __version__
 
-                self.checkpoints.update(
-                    "__task__", "__meta__", "loaded",
-                    pinned_ts=self.pinned_ts,
-                    cfg_fingerprint=_task_fingerprint(cfg),
-                    version=__version__,
-                )
+            self.checkpoints.update(
+                "__task__", "__meta__", "loaded",
+                pinned_ts=self.pinned_ts,
+                cfg_fingerprint=_task_fingerprint(cfg),
+                version=__version__,
+            )
         self.pauser = Pauser(cfg.target_dir)
         # per-table caches released in restore_table's finally: only the
         # SQL-dump branch registers here (see _read_and_transform — the

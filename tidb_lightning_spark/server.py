@@ -325,10 +325,9 @@ class _Handler(BaseHTTPRequestHandler):
         try:
             from tidb_lightning_spark.checkpoints import open_checkpoint_store
 
-            cps = open_checkpoint_store(t, driver="auto").dump()
+            tables = open_checkpoint_store(t, driver="auto").dump()["tables"]
         except (OSError, ValueError):
-            cps = {}
-        tables = cps.get("tables", cps)
+            tables = {}
         # accept both plain db.tbl and the store's backticked `db`.`tbl`
         entry = tables.get(name)
         if entry is None and "." in name and "`" not in name:
@@ -357,17 +356,16 @@ class _Handler(BaseHTTPRequestHandler):
                 open_checkpoint_store,
             )
 
-            cps = open_checkpoint_store(t, driver="auto").dump()
+            tables = open_checkpoint_store(t, driver="auto").tables()
         except (OSError, ValueError):
             return self._json(200, {})
-        tables = cps.get("tables", cps)
         names = {v: k for k, v in STATUS.items()}
         out = {}
-        for key, entry in tables.items():
+        for db, tbl, entry in tables:
             if not isinstance(entry, dict):
                 continue
             st = entry.get("status")
-            out[key.replace("`", "")] = {
+            out[f"{db}.{tbl}"] = {
                 "status": names.get(st, st) if isinstance(st, int) else st,
                 "rows": (entry.get("staged") or {}).get("rows")
                 if entry.get("staged")

@@ -259,10 +259,18 @@ class FilesSink:
         """Finish a dangling engine's Import step: idempotently move its
         data files into the table under the engine prefix. Returns the
         file count."""
-        staging = manifest["_staging"]
-        db, table, engine = (
-            manifest["db"], manifest["table"], int(manifest["engine"]),
+        return self._import_engine(
+            manifest["_staging"], manifest["db"], manifest["table"],
+            int(manifest["engine"]),
         )
+
+    def _import_engine(
+        self, staging: str, db: str, table: str, engine: int
+    ) -> int:
+        """An engine's Import step: wipe any earlier partial commit of
+        the engine, move each staged data file into the table dir as
+        `engine{k:04d}-<name>`, drop the staging dir. Returns the file
+        count."""
         final = self.table_path(db, table)
         os.makedirs(final, exist_ok=True)
         self.clear_engine_files(db, table, engine)
@@ -319,17 +327,7 @@ class FilesSink:
                     f,
                 )
 
-        os.makedirs(final, exist_ok=True)
-        self.clear_engine_files(db, table, engine)
-        n_files = 0
-        for f in sorted(os.listdir(staging)):
-            if f.endswith((".parquet", ".orc")):
-                os.replace(
-                    os.path.join(staging, f),
-                    os.path.join(final, f"engine{engine:04d}-{f}"),
-                )
-                n_files += 1
-        shutil.rmtree(staging, ignore_errors=True)
+        n_files = self._import_engine(staging, db, table, engine)
         return CommitResult(final, n_files, None, time.time() - t0)
 
     def write_meta(self, db: str, table: str, meta: dict) -> None:

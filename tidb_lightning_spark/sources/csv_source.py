@@ -516,6 +516,42 @@ def transcode_to_utf8(paths: list[str], charset: str) -> list[str]:
     return out
 
 
+def dialect_options(reader, cfg: CSVConfig):
+    """The MySQL CSV dialect as Spark reader options (module table),
+    shared by the batch reader and the file-stream reader."""
+    reader = (
+        reader.option("sep", cfg.separator)
+        # nullValue is a NEVER-MATCHING sentinel, not cfg.null: univocity
+        # returns the nullValue string for EMPTY UNQUOTED fields, so
+        # telling Spark nullValue='\\N' silently turned every empty field
+        # into NULL — MySQL semantics (csv_parser.go) are empty = ''
+        # and only the literal null text = NULL. The distinction is
+        # restored by `mysql_field`.
+        .option("nullValue", "\u0000__never__")
+        .option("emptyValue", "")
+    )
+    if not cfg.delimiter:
+        return reader.option("quote", "\u0000")  # NUL char disables quoting
+    return reader.option("quote", cfg.delimiter).option(
+        "escape", "\\" if cfg.backslash_escape else cfg.delimiter
+    )
+
+
+def mysql_field(col, cfg: CSVConfig):
+    """Restore the MySQL null/empty distinction the sentinel preserved:
+    a parsed NULL is an EMPTY unquoted field -> '' (only the null text
+    means NULL, csv_parser.go:108-117); the literal null text (default
+    '\\N', reaching us verbatim since univocity only unescapes around
+    quote chars) -> NULL. Under not-null the null text is ordinary data
+    and empties are still ''."""
+    from pyspark.sql import functions as F
+
+    v = F.coalesce(col, F.lit(""))
+    if cfg.not_null:
+        return v
+    return F.when(v == cfg.null, F.lit(None)).otherwise(v)
+
+
 def read_csv_files(
     spark: SparkSession,
     paths: list[str],
@@ -568,17 +604,7 @@ def read_csv_files(
         [T.StructField(f"_c{i}", T.StringType(), True) for i in range(n_schema)]
     )
     reader = (
-        spark.read.format("csv")
-        .schema(schema)
-        .option("sep", cfg.separator)
-        # nullValue is a NEVER-MATCHING sentinel, not cfg.null: univocity
-        # returns the nullValue string for EMPTY UNQUOTED fields, so
-        # telling Spark nullValue='\\N' silently turned every empty field
-        # into NULL — MySQL semantics (csv_parser.go) are empty = ''
-        # and only the literal null text = NULL. The distinction is
-        # restored in the projection below.
-        .option("nullValue", "\u0000__never__")
-        .option("emptyValue", "")
+        dialect_options(spark.read.format("csv").schema(schema), cfg)
         # embedded newlines in quoted fields (F4) need multiLine, which
         # makes a file one task; strict-format promises none exist
         .option("multiLine", "false" if cfg.strict_format else "true")
@@ -590,22 +616,9 @@ def read_csv_files(
         # per-file header-vs-schema warning
         .option("enforceSchema", "true")
     )
-    if cfg.delimiter:
-        reader = reader.option("quote", cfg.delimiter)
-        reader = reader.option(
-            "escape", "\\" if cfg.backslash_escape else cfg.delimiter
-        )
-    else:
-        reader = reader.option("quote", "\u0000")  # NUL char disables quoting
     df = reader.load(paths)
     if cfg.trim_last_sep:
         df = df.drop(f"_c{width}")
-    # Restore the MySQL null/empty distinction the sentinel preserved:
-    # a parsed NULL here is an EMPTY unquoted field -> '' (only the
-    # null text means NULL, csv_parser.go:108-117); the literal null
-    # text (default '\N', reaching us verbatim since univocity only
-    # unescapes around quote chars) -> NULL. Under not-null the null
-    # text is ordinary data and empties are still ''.
     from pyspark.sql import functions as F
 
     # overflow guard: NULL (and a no-op under coalesce) unless the row
@@ -633,9 +646,7 @@ def read_csv_files(
     for c in df.columns:
         if c == overflow:
             continue
-        v = F.coalesce(F.col(c), F.lit(""))
-        if not cfg.not_null:
-            v = F.when(v == cfg.null, F.lit(None)).otherwise(v)
+        v = mysql_field(F.col(c), cfg)
         if not out_cols and overflow_check is not None:
             v = F.coalesce(overflow_check, v)
         out_cols.append(v.alias(c))

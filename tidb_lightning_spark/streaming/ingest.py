@@ -37,7 +37,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
 from tidb_lightning_spark.schema.ddl import TableInfo
-from tidb_lightning_spark.sources.csv_source import CSVConfig
+from tidb_lightning_spark.sources.csv_source import (
+    CSVConfig,
+    dialect_options,
+    mysql_field,
+)
 
 
 def _allocate_batch_base(checkpoint_dir: str, batch_id: int, n_rows: int) -> int:
@@ -82,23 +86,24 @@ def read_csv_stream(
     file_columns: list[str] | None = None,
     max_files_per_trigger: int | None = None,
 ) -> DataFrame:
-    """File-stream CSV source with the MySQL dialect options of the batch
-    reader (csv_source.py option mapping) and an all-string schema — the
-    typed cast happens in the shared transform chain, identically to the
-    batch path."""
+    """File-stream CSV source with the batch reader's MySQL dialect
+    options and null/empty projection (csv_source.dialect_options /
+    mysql_field) and an all-string schema — the typed cast happens in the
+    shared transform chain, identically to the batch path."""
+    from pyspark.sql import functions as F
+
     csv = csv or CSVConfig()
     reader = (
-        spark.readStream.schema(_reader_schema(info, file_columns))
-        .option("sep", csv.separator)
-        .option("quote", csv.delimiter or '"')
-        .option("escape", "\\" if csv.backslash_escape else '"')
-        .option("nullValue", csv.null)
+        dialect_options(
+            spark.readStream.schema(_reader_schema(info, file_columns)), csv
+        )
         .option("header", str(bool(csv.header)).lower())
         .option("mode", "PERMISSIVE")
     )
     if max_files_per_trigger:
         reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    return reader.csv(source_glob)
+    df = reader.csv(source_glob)
+    return df.select(*[mysql_field(F.col(c), csv).alias(c) for c in df.columns])
 
 
 def read_jsonl_stream(
