@@ -79,11 +79,11 @@ timeit("read+transform -> noop", lambda: (
 ))
 
 # (a2) read only (parse, no cast chain) — isolates the cast cost
-raw, _names = None, None
+raw = None
 if fmt == "csv":
     from tidb_lightning_spark.sources import csv_source
     paths = [f.path for f in tbl.data_files]
-    raw, _names = csv_source.read_csv_files(
+    raw, *_ = csv_source.read_csv_files(
         spark, paths, cfg.csv, n_columns=len(info.columns), strict=False
     )
     timeit("raw csv parse -> noop", lambda: (

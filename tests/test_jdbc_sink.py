@@ -54,33 +54,37 @@ def test_merge_sql_shape():
 def test_jdbc_sink_against_embedded_derby(spark, dup_df, tmp_path):
     """End-to-end against a real database (reference golden tests
     backend/tidb_test.go): pyspark bundles Apache Derby, so the JDBC path
-    is exercised embedded — write with each duplicate policy, read the
-    target table back over JDBC, assert contents."""
+    is exercised embedded — resolve duplicates with each policy and
+    write, composed the way the pipeline delivers (policy ordered by the
+    row id, which is then dropped), read the target table back over
+    JDBC, assert contents."""
     url = f"jdbc:derby:{tmp_path}/derbydb;create=true"
     props = {"driver": "org.apache.derby.jdbc.EmbeddedDriver"}
+    sink = JDBCSink(url, properties=props)
 
-    sink = JDBCSink(url, properties=props, on_duplicate="replace")
-    sink.write_table(dup_df, "APP", "t_replace", pk=["id"])
+    def deliver(policy, table):
+        out = apply_duplicate_policy(dup_df, ["id"], policy, "_tidb_rowid")
+        sink.write_table(out.drop("_tidb_rowid"), "APP", table)
+
+    deliver("replace", "t_replace")
     back = spark.read.jdbc(url, "APP.t_replace", properties=props)
+    assert back.columns == ["id", "tag"]
     assert {r["id"]: r["tag"] for r in back.collect()} == {
         1: "second", 2: "only", 3: "c"
     }
 
-    sink = JDBCSink(url, properties=props, on_duplicate="ignore")
-    sink.write_table(dup_df, "APP", "t_ignore", pk=["id"])
+    deliver("ignore", "t_ignore")
     back = spark.read.jdbc(url, "APP.t_ignore", properties=props)
     assert {r["id"]: r["tag"] for r in back.collect()} == {
         1: "first", 2: "only", 3: "a"
     }
 
-    sink = JDBCSink(url, properties=props, on_duplicate="error")
     with pytest.raises(ValueError, match="duplicate primary key"):
-        sink.write_table(dup_df, "APP", "t_error", pk=["id"])
+        deliver("error", "t_error")
 
     # append semantics: a second replace-write adds rows at the DB level
     # (cross-batch upsert is the merge_sql path, database-specific)
-    sink = JDBCSink(url, properties=props, on_duplicate="replace")
-    sink.write_table(dup_df, "APP", "t_replace", pk=["id"])
+    deliver("replace", "t_replace")
     assert (
         spark.read.jdbc(url, "APP.t_replace", properties=props).count() == 6
     )

@@ -27,8 +27,6 @@ SPECS = [s for s in Q.registry().values() if s.oracle is not None]
 # Entries with driver-round history: always in the smoke subset.
 _ALWAYS = {
     "kn_bigram_lm",
-    "kn_bigram_inputs",
-    "kn_bigram_singlediv",
     "inverted_index_postings",
 }
 

@@ -191,12 +191,38 @@ def test_fast_path_differential_property(rows):
     assert with_fast == scanner_only
 
 
-def _frames_concat(S, text, n_cols):
+def _batches_concat(S, text, n_cols):
+    """_row_batches output (the parse kernel behind every mapInArrow
+    face) as one pandas frame, for direct .equals comparison."""
     import pandas as pd
+    import pyarrow as pa
 
-    return pd.concat(
-        list(S._row_frames(text, n_cols, 100, "t.sql")), ignore_index=True
-    )
+    batches = list(S._row_batches(text, n_cols, 100, "t.sql"))
+    if not batches:
+        return pd.DataFrame()
+    return pa.Table.from_batches(batches).to_pandas()
+
+
+def _batch_rows(S, text, n_cols):
+    """_row_batches output as plain row lists."""
+    import pyarrow as pa
+
+    batches = list(S._row_batches(text, n_cols, 100, "t.sql"))
+    return [list(r.values()) for r in pa.Table.from_batches(batches).to_pylist()]
+
+
+def _scanner_rows(S, text, n_cols):
+    """The rows a chunk must parse to, built straight from
+    parse_insert_statements: an empty tuple is all DEFAULT, `_row_seq`
+    counts from the base (100), `_src_file` is the chunk's file."""
+    from tidb_lightning_spark.operators.transform import DEFAULT_SENTINEL
+
+    rows = [
+        row or [DEFAULT_SENTINEL] * n_cols
+        for st_ in S.parse_insert_statements(text)
+        for row in st_.rows
+    ]
+    return [row + [100 + i, "t.sql"] for i, row in enumerate(rows)]
 
 
 def test_vector_tier_engages_and_matches_scanner():
@@ -219,14 +245,14 @@ def test_vector_tier_engages_and_matches_scanner():
 
     S.parse_insert_statements = boom
     try:
-        got = _frames_concat(S, text, 4)
+        got = _batches_concat(S, text, 4)
     finally:
         S.parse_insert_statements = orig
     want = None
     old = S._SQL_VECTOR
     S._SQL_VECTOR = False
     try:
-        want = _frames_concat(S, text, 4)
+        want = _batches_concat(S, text, 4)
     finally:
         S._SQL_VECTOR = old
     assert got.equals(want)
@@ -264,12 +290,12 @@ def test_vector_tier_bails_to_scanner_on_transforming_literals():
     for text in cases:
         S._SQL_VECTOR = True
         try:
-            got = _frames_concat(S, text, 2)
+            got = _batches_concat(S, text, 2)
         finally:
             S._SQL_VECTOR = old
         S._SQL_VECTOR = False
         try:
-            want = _frames_concat(S, text, 2)
+            want = _batches_concat(S, text, 2)
         finally:
             S._SQL_VECTOR = old
         assert got.equals(want), text
@@ -288,7 +314,7 @@ def test_vector_tier_signed_null_raises_like_scanner():
         S._SQL_VECTOR = vec
         try:
             with pytest.raises(Exception, match="(?i)sign.*null"):
-                _frames_concat(S, text, 2)
+                _batches_concat(S, text, 2)
         finally:
             S._SQL_VECTOR = old
 
@@ -296,7 +322,7 @@ def test_vector_tier_signed_null_raises_like_scanner():
 @settings(max_examples=200, deadline=None)
 @given(rows=rows_strategy)
 def test_vector_tier_differential_property(rows):
-    """Generated mydumper-style dumps through _row_frames with the
+    """Generated mydumper-style dumps through _row_batches with the
     vector tier on vs off: frames must be identical whether the chunk
     takes the vectorized, regex-token, or scanner tier."""
     from tidb_lightning_spark.sources import sqldump_source as S
@@ -307,12 +333,12 @@ def test_vector_tier_differential_property(rows):
         return  # mixed arity raises in both paths; covered elsewhere
     S._SQL_VECTOR = True
     try:
-        got = _frames_concat(S, text, n_cols)
+        got = _batches_concat(S, text, n_cols)
     finally:
         S._SQL_VECTOR = True
     S._SQL_VECTOR = False
     try:
-        want = _frames_concat(S, text, n_cols)
+        want = _batches_concat(S, text, n_cols)
     finally:
         S._SQL_VECTOR = True
     assert got.equals(want)
@@ -322,7 +348,7 @@ def test_vector_tier_differential_property(rows):
 @given(rows=rows_strategy, n_stmts=st.integers(1, 4))
 def test_vector_tier_multi_statement_noise_differential(rows, n_stmts):
     """Generated dumps with mysqldump noise BETWEEN statements through
-    _row_frames, vector tier on vs off: identical frames (the vector
+    _row_batches, vector tier on vs off: identical frames (the vector
     tier must either skip the noise exactly like the scanner or bail —
     never mis-attribute rows across statement boundaries)."""
     from tidb_lightning_spark.sources import sqldump_source as S
@@ -339,12 +365,12 @@ def test_vector_tier_multi_statement_noise_differential(rows, n_stmts):
     )
     S._SQL_VECTOR = True
     try:
-        got = _frames_concat(S, text, n_cols)
+        got = _batches_concat(S, text, n_cols)
     finally:
         S._SQL_VECTOR = True
     S._SQL_VECTOR = False
     try:
-        want = _frames_concat(S, text, n_cols)
+        want = _batches_concat(S, text, n_cols)
     finally:
         S._SQL_VECTOR = True
     assert got.equals(want)
@@ -368,7 +394,7 @@ def test_empty_tuple_and_default_keyword_take_defaults():
     for vec in (True, False):
         S._SQL_VECTOR = vec
         try:
-            frames[vec] = _frames_concat(S, text, 2)
+            frames[vec] = _batches_concat(S, text, 2)
         finally:
             S._SQL_VECTOR = old
     assert frames[True].equals(frames[False])
@@ -379,47 +405,26 @@ def test_empty_tuple_and_default_keyword_take_defaults():
     ]
 
 
-def _batches_concat(S, text, n_cols):
-    """_row_batches output as one pandas frame, same dtypes as
-    _frames_concat for direct .equals comparison."""
-    import pandas as pd
-    import pyarrow as pa
-
-    batches = list(S._row_batches(text, n_cols, 100, "t.sql"))
-    if not batches:
-        return pd.DataFrame()
-    return pa.Table.from_batches(batches).to_pandas()
-
-
 @settings(max_examples=150, deadline=None)
 @given(rows=rows_strategy)
-def test_row_batches_matches_row_frames_property(rows):
-    """r13 mapInArrow parse face: _row_batches (Arrow RecordBatches, the
-    production scan path) must produce byte-identical rows to
-    _row_frames (the pandas reference the other differentials pin),
-    whichever tier the chunk takes — same columns, same _row_seq
-    continuity, same null cells."""
-    import pandas as pd
-
+def test_row_batches_match_scanner_rows_property(rows):
+    """The mapInArrow parse face: _row_batches (Arrow RecordBatches, the
+    production scan path) must produce exactly the rows
+    parse_insert_statements yields, whichever tier the chunk takes —
+    same cells, same null cells, _row_seq continuous from the base."""
     from tidb_lightning_spark.sources import sqldump_source as S
 
     n_cols = len(rows[0])
     if any(len(r) != n_cols for r in rows):
         return
     text = render_insert("t", rows)
-    want = _frames_concat(S, text, n_cols)
-    got = _batches_concat(S, text, n_cols)
-    pd.testing.assert_frame_equal(
-        got, want, check_dtype=False, check_like=False
-    )
+    assert _batch_rows(S, text, n_cols) == _scanner_rows(S, text, n_cols)
 
 
-def test_row_batches_scanner_tier_matches_frames():
+def test_row_batches_scanner_tier_matches_scanner_rows():
     """Force the scanner tier (vector off): _row_batches' direct-to-
-    Arrow row buffering must equal _row_frames' pandas path, including
-    DEFAULT sentinels and NULLs."""
-    import pandas as pd
-
+    Arrow row buffering must equal the rows parse_insert_statements
+    yields, including DEFAULT sentinels and NULLs."""
     from tidb_lightning_spark.sources import sqldump_source as S
 
     text = (
@@ -429,8 +434,8 @@ def test_row_batches_scanner_tier_matches_frames():
     old = S._SQL_VECTOR
     S._SQL_VECTOR = False
     try:
-        want = _frames_concat(S, text, 2)
-        got = _batches_concat(S, text, 2)
+        got = _batch_rows(S, text, 2)
     finally:
         S._SQL_VECTOR = old
-    pd.testing.assert_frame_equal(got, want, check_dtype=False)
+    assert got == _scanner_rows(S, text, 2)
+    assert got[3][:2] == [None, "A"]

@@ -292,7 +292,7 @@ def test_stream_restore_csv_empty_field_is_not_null(spark, tmp_path):
     )
     assert got == [(1, "", "x"), (2, None, "")]
 
-    batch, _ = read_csv_files(spark, [str(src / "d.t.000.csv")], CSVConfig())
+    batch, *_ = read_csv_files(spark, [str(src / "d.t.000.csv")], CSVConfig())
     assert sorted(tuple(r) for r in batch.collect()) == [
         ("1", "", "x"), ("2", None, ""),
     ]

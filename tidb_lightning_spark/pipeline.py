@@ -207,22 +207,21 @@ def _readback_pass(
     return rows, cks, stats, None if top is None else int(top)
 
 
-def _text_size(f, path: str | None = None) -> int:
-    """Bytes of text a scan of data file `f` (read from `path`, default
-    `f.path`) parses: the input of row-id reservation. Local files report
-    their DECOMPRESSED size — a gz file's rows can exceed its compressed
-    bytes // divisor and overrun the next base. Remote files keep the
-    discovery size: a plain one is its text size; a compressed one cannot
-    be probed locally, so warn that its range may overrun."""
-    path = path or f.path
-    if os.path.exists(path):
-        return sqldump_source.decompressed_size(path)
-    if f.compression or sqldump_source._is_compressed(path):
+def _text_size(f) -> int:
+    """Bytes of text a scan of data file `f` parses: the input of row-id
+    reservation. Local files report their DECOMPRESSED size — a gz
+    file's rows can exceed its compressed bytes // divisor and overrun
+    the next base. Remote files keep the discovery size: a plain one is
+    its text size; a compressed one cannot be probed locally, so warn
+    that its range may overrun."""
+    if os.path.exists(f.path):
+        return sqldump_source.decompressed_size(f.path)
+    if f.compression or sqldump_source._is_compressed(f.path):
         log.warning(
             "remote compressed file %s: row-id range reserved from "
             "COMPRESSED size — ranges may overrun on highly-compressible "
             "data; prefer uncompressed remote sources",
-            path,
+            f.path,
         )
     return f.file_size
 
@@ -913,7 +912,7 @@ class Restorer:
             obs, aggs = new_obs()
             self.jdbc_sink.write_table(
                 df if obs is None else df.observe(obs, *aggs),
-                tgt.db, tgt.delivery_name, pk=None,
+                tgt.db, tgt.delivery_name,
             )
             ingest_cks = _observed(obs)
             # remote checksum (I2/L2): read the WRITTEN table back over
@@ -1667,230 +1666,54 @@ class Restorer:
             finish(df, None, reserve(jsonl_files))
 
         if csv_files:
-            # BLOB-in-CSV byte preservation (reference tests/csv
-            # `escapes.b`): the reference parses CSV at the byte level,
-            # so raw non-utf-8 bytes inside a quoted blob field (0xFF,
-            # bare CR/LF) reach the table verbatim. A utf-8 Spark read
-            # would U+FFFD them first — so when the target schema has
-            # binary-family columns and the file bytes are utf-8/ascii,
-            # read byte-preserving (latin-1), re-decode the TEXT columns
-            # back to utf-8, and hand binary columns their raw bytes.
-            # (A legacy-charset CSV carrying blobs can't be both
-            # transcoded and byte-preserved — text wins, as before.)
             import pyspark.sql.types as _T
+
+            from tidb_lightning_spark.operators.cast import STRING_FAMILY_BASES
 
             bin_cols = {
                 c.name.lower()
                 for c in info.columns
                 if isinstance(c.mysql.spark_type(), _T.BinaryType)
             }
+            # MySQL \n/\t/... escapes the lexer left as two chars are
+            # restored inside the cast of string-family target columns
+            # (cast.mysql_unescape_expr rationale)
+            esc_cols = {
+                c.name.lower()
+                for c in info.columns
+                if c.mysql.base in STRING_FAMILY_BASES
+            }
             for header, paths in csv_source.group_files_by_header(
                 [f.path for f in csv_files], self.cfg.csv, self.spark
             ):
-                # exact MySQL-dialect lexer when a sample shows the
-                # byte patterns univocity cannot round-trip (doubled
-                # quotes / doubled backslashes) — see csv_source
-                use_exact = (
-                    self.cfg.csv.exact_dialect
-                    if self.cfg.csv.exact_dialect is not None
-                    else csv_source.needs_exact_dialect(
-                        paths, self.cfg.csv, self.spark
-                    )
-                )
-                if use_exact:
-                    df, names = csv_source.read_csv_files_exact(
-                        self.spark,
-                        paths,
-                        self.cfg.csv,
-                        n_columns=len(info.columns),
-                    )
-                    raw_read = True  # lexer output is latin-1-preserved
-                else:
-                    raw_read = False
-                    if bin_cols:
-                        try:
-                            eff0 = csv_source.effective_charset(
-                                paths[0], self.cfg.csv.character_set,
-                                self.spark,
-                            )
-                        except NotImplementedError:
-                            eff0 = "utf-8"  # compressed remote: no peek
-                        raw_read = eff0 in ("utf-8", "us-ascii", "ascii")
-                    csv_cfg = self.cfg.csv
-                    if raw_read:
-                        import dataclasses as _dc
-
-                        csv_cfg = _dc.replace(
-                            self.cfg.csv, character_set="iso-8859-1"
-                        )
-                    df, names = csv_source.read_csv_files(
-                        self.spark,
-                        paths,
-                        csv_cfg,
-                        n_columns=len(info.columns),
-                        strict=self.cfg.strict_sql_mode,
-                    )
                 file_cols = list(header) if header else None
-                if raw_read:
-                    srcs = file_cols or [c.name for c in info.columns]
-                    df = df.withColumns({
-                        f"_c{i}": F.decode(
-                            F.encode(F.col(f"_c{i}"), "ISO-8859-1"), "UTF-8"
-                        )
-                        for i, cname in enumerate(srcs)
-                        if f"_c{i}" in df.columns
-                        and cname.lower() not in bin_cols
-                    })
-                # MySQL \n/\t/... escapes survive the CSV lexer as two
-                # chars; restore them inside the cast of string-family
-                # target columns (cast.mysql_unescape_expr rationale)
-                esc_cols = None
-                if use_exact:
-                    pass  # the exact lexer unescaped in its one pass
-                elif self.cfg.csv.delimiter and self.cfg.csv.backslash_escape:
-                    from tidb_lightning_spark.operators.cast import (
-                        STRING_FAMILY_BASES,
-                    )
-
-                    esc_cols = {
-                        c.name.lower()
-                        for c in info.columns
-                        if c.mysql.base in STRING_FAMILY_BASES
-                    }
+                names = file_cols or [c.name for c in info.columns]
+                df, _, unescape, binary_encoding = csv_source.read_csv_files(
+                    self.spark,
+                    paths,
+                    self.cfg.csv,
+                    n_columns=len(info.columns),
+                    strict=self.cfg.strict_sql_mode,
+                    binary_cols={
+                        i for i, n in enumerate(names) if n.lower() in bin_cols
+                    },
+                )
                 pathset = set(paths)
                 finish(
                     df,
                     file_cols,
                     reserve([f for f in csv_files if f.path in pathset]),
-                    unescape_cols=esc_cols,
-                    binary_encoding="ISO-8859-1" if raw_read else "UTF-8",
+                    unescape_cols=esc_cols if unescape else None,
+                    binary_encoding=binary_encoding,
                 )
 
         if sql_files:
-            remote_set = {f.path for f in sql_files if is_remote(f.path)}
-            charset = (self.cfg.character_set or "utf-8").lower()
-
-            def _eff(path: str, remote: bool) -> str:
-                # per-file charset resolution ('auto' detects utf-8 then
-                # gb18030, reference reader.go:43-55); remote detection
-                # is one bounded ranged read
-                return csv_source.effective_charset(
-                    path, charset, self.spark if remote else None
-                )
-            # Remote dumps the distributed readers can't take are
-            # SPOOLED to the local cache (one driver stream per file —
-            # the reference's own per-file reader pass,
-            # mydump/reader.go:39-118,140-179) and then flow through
-            # the local machinery, which handles any size, charset and
-            # compression:
-            #   - compressed remote dumps (row-id reservation needs the
-            #     DECOMPRESSED size, and compressed streams aren't
-            #     range-splittable anyway)
-            #   - legacy-charset remote dumps past the whole-file cap
-            #     (the ranged reader's Hadoop Text decode is utf-8-only)
-            spool = sorted(
-                p for p in remote_set if sqldump_source._is_compressed(p)
-            )
-            # eff: resolved per-file charset. Uncompressed files resolve
-            # now (drives the over-cap spool decision); spooled
-            # compressed files resolve on their local copies below.
-            eff = {
-                f.path: _eff(f.path, f.path in remote_set)
-                for f in sql_files
-                if f.path not in spool
-            }
-            cap = sqldump_source.REMOTE_SQL_MAX_BYTES
-            fsizes = {f.path: f.file_size for f in sql_files}
-            spool += sorted(
-                p for p in remote_set - set(spool)
-                if eff[p] not in ("utf-8", "ascii", "us-ascii")
-                and fsizes.get(p, 0) > cap
-            )
-            actual = {f.path: f.path for f in sql_files}
-            if spool:
-                copies = csv_source.spool_remote_to_local(
-                    spool, self.spark
-                )
-                actual.update(zip(spool, copies))
-                remote_set -= set(spool)
-                for p in spool:
-                    eff[p] = _eff(actual[p], False)
-            # the Spark text reader is UTF-8-only: legacy-charset LOCAL
-            # dumps (including freshly spooled ones) are stream-
-            # transcoded driver-side first (A10 — same contract as the
-            # CSV path; reader.go:39-69). Remote dumps skip the
-            # transcode: their content is decoded with the configured
-            # charset directly in the executor parser.
-            local_sql = [f for f in sql_files if f.path not in remote_set]
-            need_tc = [
-                f for f in local_sql
-                if eff[f.path] not in ("utf-8", "ascii", "us-ascii")
-            ]
-            if need_tc:
-                transcoded = csv_source.transcode_to_utf8(
-                    [actual[f.path] for f in need_tc],
-                    # per-file resolved charsets may differ under 'auto';
-                    # transcode one group per charset
-                    charset if charset != "auto" else "auto",
-                )
-                actual.update(
-                    zip((f.path for f in need_tc), transcoded)
-                )
-            # lz4 dumps: no JVM codec reads the lz4 frame format, and the
-            # range reader wants seekable plain text — materialize ONCE
-            # driver-side (same contract as the transcode step above;
-            # no-op when nothing is .lz4). The row-id bases below are
-            # sized from the path the scan actually reads, so rewrite
-            # before them.
-            mat = csv_source.materialize_lz4(
-                [actual[f.path] for f in local_sql]
-            )
-            actual.update(zip((f.path for f in local_sql), mat))
-            groups: dict[tuple, list] = {}
-            for f in sql_files:
-                remote = f.path in remote_set
-                cols = sqldump_source.peek_columns(
-                    actual[f.path],
-                    eff[f.path] if remote else "utf-8",
-                    spark=self.spark if remote else None,
-                )
-                # remote groups must share a charset too: the ranged
-                # reader decodes one encoding per scan
-                key = (
-                    tuple(cols) if cols else (),
-                    remote,
-                    eff[f.path] if remote else "utf-8",
-                )
-                groups.setdefault(key, []).append(f)
-            for (key, remote, group_cs), files in groups.items():
-                file_cols = list(key) if key else None
-                # the readers fold per-file row-id bases (region.go:252-
-                # 286) into _row_seq, sized with the file's arity
-                n_cols = len(file_cols) if file_cols else len(info.columns)
-                if remote:
-                    # whole-file tasks through the Hadoop binaryFile
-                    # connector (read_sql_files_remote docstring; parity:
-                    # the reference never splits .sql mid-file either,
-                    # region.go:131-234). Plain .sql only — the guard
-                    # above — so the observed byte length IS the text
-                    # size the divisor bound needs.
-                    df, reserved = sqldump_source.read_sql_files_remote(
-                        self.spark,
-                        [f.path for f in files],
-                        n_cols,
-                        group_cs,
-                    )
-                else:
-                    bases, reserved = sqldump_source.file_bases(
-                        [_text_size(f, actual[f.path]) for f in files], n_cols
-                    )
-                    df = sqldump_source.read_sql_files(
-                        self.spark,
-                        [actual[f.path] for f in files],
-                        n_cols,
-                        "utf-8",
-                        bases=bases,
-                    )
+            for df, file_cols, reserved in sqldump_source.read_sql_groups(
+                self.spark,
+                [(f.path, f.file_size) for f in sql_files],
+                self.cfg.character_set or "utf-8",
+                len(info.columns),
+            ):
                 finish(
                     df,
                     file_cols,

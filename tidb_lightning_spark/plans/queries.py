@@ -7354,7 +7354,7 @@ def kn_bigram_lm(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _kn_counts(spark: SparkSession, sf_dir: str):
-    """Shared KN count machinery: the bigram table joined with its
+    """KN count machinery: the bigram table joined with its
     margins — (w1, w2, c, c1, n1r, n1l, nbb). Returns (joined, big);
     the caller owns releasing `big` (cache_acquire'd here)."""
     d = load(spark, sf_dir, "documents")
@@ -7393,132 +7393,6 @@ def _kn_counts(spark: SparkSession, sf_dir: str):
         .crossJoin(F.broadcast(tot))
     )
     return joined, big
-
-
-_KN_COUNTS_SQL = """
-    WITH toks AS (
-      SELECT {toks} AS t FROM documents
-    ), pairs AS (
-      SELECT t[i] AS w1, t[i + 1] AS w2
-      FROM toks, UNNEST(range(1, len(t))) AS u(i)
-      WHERE len(t) >= 2
-    ), big AS (
-      SELECT w1, w2, CAST(count(*) AS BIGINT) AS c
-      FROM pairs GROUP BY w1, w2
-    ), lft AS (
-      SELECT w1, CAST(SUM(c) AS BIGINT) AS c1,
-             CAST(count(*) AS BIGINT) AS n1r
-      FROM big GROUP BY w1
-    ), rgt AS (
-      SELECT w2, CAST(count(*) AS BIGINT) AS n1l
-      FROM big GROUP BY w2
-    ), tot AS (
-      SELECT CAST(count(*) AS BIGINT) AS nbb FROM big
-    ), joined AS (
-      SELECT big.w1, big.w2, big.c, lft.c1, lft.n1r, rgt.n1l, tot.nbb
-      FROM big
-      JOIN lft USING (w1)
-      JOIN rgt USING (w2)
-      CROSS JOIN tot
-    )
-"""
-
-
-def _kn_inputs_oracle() -> str:
-    toks = TX.SQL_TOKENS.format(col="lower(text)")
-    head = _KN_COUNTS_SQL.format(toks=toks)
-    return f"""{head}
-    SELECT w1, w2, c, c1, n1r, n1l, nbb, rank
-    FROM (
-      SELECT *, CAST(row_number() OVER (
-        ORDER BY c DESC, w1, w2) AS INT) AS rank
-      FROM joined
-    )
-    WHERE rank <= {KN_TOPK}
-    ORDER BY rank
-    """
-
-
-@register("kn_bigram_inputs", _kn_inputs_oracle())
-def kn_bigram_inputs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Diagnostic twin of kn_bigram_lm (r11 verdict item 1): the RAW
-    integer inputs only — the top bigrams by (c DESC, w1, w2)
-    with every margin the KN formula consumes and ZERO division — so a
-    driver-red kn_bigram_lm bisects: this row red = the tokenize/count
-    stage diverges; this green + kn red = the scoring arithmetic (or
-    its output typing) is the culprit. Row selection keys on raw
-    counts, never on a computed score, so the emitted row SET cannot
-    depend on the suspect stage."""
-    joined, big = _kn_counts(spark, sf_dir)
-    w_rank = Window.orderBy(F.col("c").desc(), F.asc("w1"), F.asc("w2"))
-    out = (
-        joined.withColumn(
-            "rank", F.row_number().over(w_rank).cast("int")
-        )
-        .filter(F.col("rank") <= KN_TOPK)
-        .select("w1", "w2", "c", "c1", "n1r", "n1l", "nbb", "rank")
-        .orderBy("rank")
-    )
-    out = D._unpersist_on_gc(out, big)
-    D.cache_release(big)
-    return out
-
-
-# single-floor-div twin runs at a smaller fixed point: the combined
-# numerator S*(nbb*(4c-3) + 3*n1r*n1l) carries an extra nbb factor, so
-# 10^12 would overflow int64 already at nbb*c ~ 2.3e6 — 10^6 keeps the
-# gate-scale headroom above 10^6x in both engines
-KN_SCALE_1DIV = 10**6
-
-
-def _kn_singlediv_oracle() -> str:
-    toks = TX.SQL_TOKENS.format(col="lower(text)")
-    head = _KN_COUNTS_SQL.format(toks=toks)
-    s = KN_SCALE_1DIV
-    return f"""{head}
-    SELECT w1, w2, c, p1_scaled, rank
-    FROM (
-      SELECT w1, w2, c,
-             CAST(({s} * (nbb * (4 * c - 3) + 3 * n1r * n1l))
-                  // (4 * c1 * nbb) AS BIGINT) AS p1_scaled,
-             CAST(row_number() OVER (
-               ORDER BY c DESC, w1, w2) AS INT) AS rank
-      FROM joined
-    )
-    WHERE rank <= {KN_TOPK}
-    ORDER BY rank
-    """
-
-
-@register("kn_bigram_singlediv", _kn_singlediv_oracle())
-def kn_bigram_singlediv(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Second diagnostic twin of kn_bigram_lm (r11 verdict item 1): the
-    same smoothed probability as ONE floor-division —
-    (S*(nbb*(4c-3) + 3*n1r*n1l)) DIV (4*c1*nbb) — over the same
-    count-keyed row set as kn_bigram_inputs. kn red + inputs green +
-    this green convicts the two-term DIV sum specifically; this red
-    too convicts integer division at large. Fixed point is
-    KN_SCALE_1DIV (see above) for int64 headroom with the extra nbb
-    factor in the numerator."""
-    s = KN_SCALE_1DIV
-    joined, big = _kn_counts(spark, sf_dir)
-    w_rank = Window.orderBy(F.col("c").desc(), F.asc("w1"), F.asc("w2"))
-    out = (
-        joined.select(
-            "w1", "w2", "c",
-            F.expr(
-                f"({s} * (nbb * (4 * c - 3) + 3 * n1r * n1l))"
-                f" DIV (4 * c1 * nbb)"
-            ).cast("long").alias("p1_scaled"),
-        )
-        .withColumn("rank", F.row_number().over(w_rank).cast("int"))
-        .filter(F.col("rank") <= KN_TOPK)
-        .select("w1", "w2", "c", "p1_scaled", "rank")
-        .orderBy("rank")
-    )
-    out = D._unpersist_on_gc(out, big)
-    D.cache_release(big)
-    return out
 
 
 # ---------------------------------------------------------------------------

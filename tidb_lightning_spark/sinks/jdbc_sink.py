@@ -491,23 +491,13 @@ class JDBCSink:
             spark, self.url, sql, self.properties, ignore_exists=True
         )
 
-    def write_table(
-        self,
-        df: DataFrame,
-        db: str,
-        table: str,
-        pk: list[str] | None = None,
-        order_col: str = "_tidb_rowid",
-    ) -> None:
-        out = apply_duplicate_policy(
-            df, pk or [], self.on_duplicate, order_col=order_col
-        )
-        if order_col in out.columns and (not pk or order_col not in pk):
-            out = out.drop(order_col)
+    def write_table(self, df: DataFrame, db: str, table: str) -> None:
+        """Append `df` to `db.table` as it is. Duplicate resolution is
+        the caller's (`apply_duplicate_policy`, before the write)."""
 
         def do_write():
             (
-                out.write.mode("append")
+                df.write.mode("append")
                 .option("batchsize", str(self.batchsize))
                 .jdbc(self.url, f"{db}.{table}", properties=self.properties)
             )

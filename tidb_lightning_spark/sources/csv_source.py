@@ -29,12 +29,13 @@ sharing a header are batched into one multi-path spark.read so a
 from __future__ import annotations
 
 import codecs
-import dataclasses
 import io
 import os
+from collections.abc import Collection
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from tidb_lightning_spark.paths import is_remote
@@ -328,16 +329,22 @@ def materialize_lz4(paths: list[str]) -> list[str]:
 
 def read_header(path: str, cfg: CSVConfig, spark=None) -> list[str]:
     """Driver-side first-line read -> column names (csv_parser.go:513-538)."""
+    fields = _split_line_first(path, cfg, cfg.character_set, spark)
+    if cfg.trim_last_sep and fields and fields[-1] == "":
+        fields = fields[:-1]
+    return [f.strip().strip(cfg.delimiter) if cfg.delimiter else f for f in fields]
+
+
+def _split_line_first(
+    path: str, cfg: CSVConfig, charset: str, spark=None
+) -> list[str]:
+    """The fields of the first line of `path`, decoded as `charset`."""
     with _decompress_open(path, spark) as f:
         raw = f.read(1 << 20)
     if len(raw) == 1 << 20:
         raw = raw[:-3]  # drop a possibly-split trailing multibyte char
-    text = decode_file_bytes(raw, cfg.character_set, path)
-    line = io.StringIO(text).readline().rstrip("\r\n")
-    fields = _split_line(line, cfg)
-    if cfg.trim_last_sep and fields and fields[-1] == "":
-        fields = fields[:-1]
-    return [f.strip().strip(cfg.delimiter) if cfg.delimiter else f for f in fields]
+    text = decode_file_bytes(raw, charset, path)
+    return _split_line(io.StringIO(text).readline().rstrip("\r\n"), cfg)
 
 
 def _split_line(line: str, cfg: CSVConfig) -> list[str]:
@@ -374,12 +381,23 @@ def _split_line(line: str, cfg: CSVConfig) -> list[str]:
     return out
 
 
-# charsets Spark 4's CSV reader accepts natively; anything else goes
-# through the transcode step (the reference transcodes at read time too:
-# lightning/mydump/reader.go:39-118)
+# The charsets Spark's CSV reader decodes itself, keyed by the codecs
+# name `effective_charset` returns, with the name Spark takes; any other
+# charset is transcoded first (the reference transcodes at read time
+# too: lightning/mydump/reader.go:39-118).
 SPARK_NATIVE_CHARSETS = {
-    "iso-8859-1", "us-ascii", "utf-16", "utf-16be", "utf-16le", "utf-32", "utf-8",
+    "utf-8": "UTF-8", "ascii": "US-ASCII", "iso8859-1": "ISO-8859-1",
+    "utf-16": "UTF-16", "utf-16-be": "UTF-16BE", "utf-16-le": "UTF-16LE",
+    "utf-32": "UTF-32",
 }
+# ...but not these under strict-format: its line-split scan cuts at 0x0A
+# bytes, which these encodings put inside characters (Spark 4.1 garbles
+# every row); only a whole-file read decodes them
+_WIDE_CHARSETS = frozenset({"utf-16", "utf-16-be", "utf-16-le", "utf-32"})
+# codecs names of the charsets whose bytes are utf-8 text as they stand:
+# no transcode for the SQL reader or the exact lexer, and the only ones a
+# byte-preserving (latin-1) read can decode back to text
+UTF8_CHARSETS = frozenset({"utf-8", "ascii"})
 
 # bounded prefix used to auto-detect a DATA file's charset. The
 # reference validates whole files but only ever sees SCHEMA files
@@ -446,14 +464,13 @@ def detect_charset(path: str, spark=None) -> str:
 
 
 def effective_charset(path: str, configured: str, spark=None) -> str:
-    """The concrete codec a data read should use: resolves 'auto' by
-    detection, normalizes everything else via codecs."""
+    """The concrete codec a data read should use, as its codecs name:
+    resolves 'auto' by detection and 'binary' to the latin-1
+    passthrough."""
     low = (configured or "utf-8").lower()
     if low == "auto":
         return detect_charset(path, spark)
-    if low == "binary":
-        return "iso-8859-1"
-    return codecs.lookup(low).name
+    return codecs.lookup("iso-8859-1" if low == "binary" else low).name
 
 
 def transcode_to_utf8(paths: list[str], charset: str) -> list[str]:
@@ -462,11 +479,9 @@ def transcode_to_utf8(paths: list[str], charset: str) -> list[str]:
 
     Driver-side IO — appropriate for legacy dump files which are rare and
     bounded; a 100 TB corpus in gb18030 should be pre-transcoded with a
-    distributed text pass instead (mapInPandas decode), which this
+    distributed text pass instead (executor-side decode), which this
     function's contract allows swapping in.
     """
-    import codecs
-
     remote = [p for p in paths if is_remote(p)]
     if remote:
         raise NotImplementedError(
@@ -479,7 +494,7 @@ def transcode_to_utf8(paths: list[str], charset: str) -> list[str]:
     for p in paths:
         st = os.stat(p)
 
-        eff = charset if charset != "auto" else detect_charset(p)
+        eff = effective_charset(p, charset)
 
         def transcode(tmp, p=p, eff=eff):
             # compressed sources must be decompressed BEFORE transcoding
@@ -544,8 +559,6 @@ def mysql_field(col, cfg: CSVConfig):
     '\\N', reaching us verbatim since univocity only unescapes around
     quote chars) -> NULL. Under not-null the null text is ordinary data
     and empties are still ''."""
-    from pyspark.sql import functions as F
-
     v = F.coalesce(col, F.lit(""))
     if cfg.not_null:
         return v
@@ -558,19 +571,35 @@ def read_csv_files(
     cfg: CSVConfig,
     n_columns: int | None = None,
     strict: bool = False,
-) -> tuple[DataFrame, list[str] | None]:
-    """Read data files as all-string columns.
+    binary_cols: Collection[int] = (),
+) -> tuple[DataFrame, list[str] | None, bool, str]:
+    """Read data files as all-string columns `_c0.._cN` — the one CSV
+    batch reader.
 
-    Returns (df, header_names). With cfg.header, all `paths` must share one
-    header (the caller groups by header); header_names=None otherwise and
-    columns are positional `_c0.._cN`.
+    Returns (df, header_names, unescape, binary_encoding). With
+    cfg.header, all `paths` must share one header (the caller groups by
+    header); header_names=None otherwise and columns are positional.
+
+    The reader owns every format decision of the scan: lz4 frames are
+    decompressed, the charset is resolved once (from the first file)
+    and transcoded when Spark cannot decode it, and the lexer is chosen
+    — the exact MySQL-dialect one (`cfg.exact_dialect`, else
+    `needs_exact_dialect`) or Spark's. `binary_cols` are the `_c{i}`
+    positions whose target column takes raw bytes: with any, a utf-8
+    file is read byte-preserving (latin-1) and only the other columns
+    are decoded back to text, so raw non-utf-8 bytes inside a quoted
+    blob field (0xFF, bare CR/LF) reach the table verbatim, as the
+    reference's byte-level parser keeps them (tests/csv `escapes.b`).
+    The exact lexer always reads that way. A legacy-charset file
+    carrying blobs cannot be both transcoded and byte-preserved: text
+    wins. What the cast needs back: `unescape` — MySQL `\\n`/`\\t`/...
+    escapes are still two characters in the text (the exact lexer
+    unescapes in its one pass) — and the `binary_encoding` that turns a
+    binary column's text back into bytes.
     """
     paths = materialize_lz4(paths)
-    header_names: list[str] | None = None
-    width = n_columns
-    if cfg.header:
-        header_names = read_header(paths[0], cfg, spark)
-        width = len(header_names)
+    header_names = read_header(paths[0], cfg, spark) if cfg.header else None
+    width = len(header_names) if header_names is not None else n_columns
 
     # 'auto' resolves per scan group from the first file (reference
     # detects per file, reader.go:43-55; one table's files sharing a
@@ -583,13 +612,51 @@ def read_csv_files(
         # utf-8 (the executor scan decompresses natively; a legacy
         # charset there requires an explicit character-set anyway)
         charset = "utf-8"
-    if charset not in SPARK_NATIVE_CHARSETS:
+    exact = (
+        cfg.exact_dialect
+        if cfg.exact_dialect is not None
+        else needs_exact_dialect(paths, cfg, spark)
+    )
+    raw = exact or (bool(binary_cols) and charset in UTF8_CHARSETS)
+    if exact:
+        readable = charset in UTF8_CHARSETS  # the lexer decodes utf-8
+    else:
+        readable = charset in SPARK_NATIVE_CHARSETS and not (
+            cfg.strict_format and charset in _WIDE_CHARSETS
+        )
+    if not readable:
         paths = transcode_to_utf8(paths, charset)
-        cfg = dataclasses.replace(cfg, character_set="utf-8")
+        charset = "utf-8"
+    encoding = "iso8859-1" if raw else charset
     if width is None:
         # probe width from the first line of the first file
-        width = len(_split_line_first(paths[0], cfg, spark))
+        width = len(_split_line_first(paths[0], cfg, encoding, spark))
 
+    if exact:
+        df = _lex_scan(spark, paths, cfg, width)
+    else:
+        df = _spark_scan(
+            spark, paths, cfg, width, strict, SPARK_NATIVE_CHARSETS[encoding]
+        )
+    if raw:
+        df = df.withColumns({
+            f"_c{i}": F.decode(F.encode(F.col(f"_c{i}"), "ISO-8859-1"), "UTF-8")
+            for i in range(width)
+            if i not in binary_cols
+        })
+    unescape = not exact and bool(cfg.delimiter) and cfg.backslash_escape
+    return df, header_names, unescape, "ISO-8859-1" if raw else "UTF-8"
+
+
+def _spark_scan(
+    spark: SparkSession,
+    paths: list[str],
+    cfg: CSVConfig,
+    width: int,
+    strict: bool,
+    encoding: str,
+) -> DataFrame:
+    """Spark's CSV reader over `paths` in `encoding`: `width` columns."""
     n_read = width + (1 if cfg.trim_last_sep else 0)
     # one extra probe column (PERMISSIVE mode only): a row carrying MORE
     # fields than the table has columns must ERROR like the reference
@@ -608,7 +675,7 @@ def read_csv_files(
         # embedded newlines in quoted fields (F4) need multiLine, which
         # makes a file one task; strict-format promises none exist
         .option("multiLine", "false" if cfg.strict_format else "true")
-        .option("encoding", cfg.character_set)
+        .option("encoding", encoding)
         .option("mode", "FAILFAST" if strict else "PERMISSIVE")
         .option("header", "true" if cfg.header else "false")
         # we intentionally pass a positional _c* schema with header=true
@@ -619,7 +686,6 @@ def read_csv_files(
     df = reader.load(paths)
     if cfg.trim_last_sep:
         df = df.drop(f"_c{width}")
-    from pyspark.sql import functions as F
 
     # overflow guard: NULL (and a no-op under coalesce) unless the row
     # really carried an extra field, in which case the task fails with
@@ -650,8 +716,7 @@ def read_csv_files(
         if not out_cols and overflow_check is not None:
             v = F.coalesce(overflow_check, v)
         out_cols.append(v.alias(c))
-    df = df.select(*out_cols)
-    return df, header_names
+    return df.select(*out_cols)
 
 
 # ---------------------------------------------------------------------------
@@ -862,70 +927,43 @@ def _lex_mysql_csv(
     ]
 
 
-def read_csv_files_exact(
-    spark: SparkSession,
-    paths: list[str],
-    cfg: CSVConfig,
-    n_columns: int | None = None,
-) -> tuple[DataFrame, list[str] | None]:
-    """Exact-dialect counterpart of read_csv_files: whole-file executor
-    tasks, byte-preserving latin-1 text, one-pass MySQL unescape done IN
-    the lexer (callers must NOT re-apply unescape_cols, and must
-    re-decode text columns from the latin-1 preservation — the same
-    contract as the binary-column raw read). Legacy charsets are
-    transcoded first, exactly like the fast path."""
+def _lex_scan(
+    spark: SparkSession, paths: list[str], cfg: CSVConfig, width: int
+) -> DataFrame:
+    """The exact lexer over `paths` (utf-8 bytes): one whole-file
+    executor task per file lexing latin-1-preserved text, `width`
+    columns."""
     from tidb_lightning_spark import _shipping
-
-    paths = materialize_lz4(paths)
-    header_names: list[str] | None = None
-    width = n_columns
-    if cfg.header:
-        header_names = read_header(paths[0], cfg, spark)
-        width = len(header_names)
-    charset = effective_charset(paths[0], cfg.character_set, spark)
-    if charset not in SPARK_NATIVE_CHARSETS:
-        paths = transcode_to_utf8(paths, charset)
-    if width is None:
-        width = len(_split_line_first(paths[0], cfg, spark))
-    n_read = width
 
     _shipping.ensure_shipped(spark)
     meta = spark.createDataFrame(
         [(p,) for p in paths], "path string"
     ).repartition(max(len(paths), 1), "path")
-    out_schema = T.StructType(
-        [T.StructField(f"_c{i}", T.StringType(), True) for i in range(n_read)]
-    )
+    names = [f"_c{i}" for i in range(width)]
     skip_header = cfg.header
 
     def parse(batches):
-        import pandas as pd
+        import pyarrow as pa
 
-        for pdf in batches:
-            for path in pdf["path"]:
+        for rb in batches:
+            for path in rb.column("path").to_pylist():
                 with _decompress_open(path) as f:
                     text = f.read().decode("iso-8859-1")
-                rows = _lex_mysql_csv(text, cfg, n_read)
+                rows = _lex_mysql_csv(text, cfg, width)
                 if skip_header and rows:
                     rows = rows[1:]
-                yield pd.DataFrame(
-                    {
-                        f"_c{i}": [r[i] for r in rows]
-                        for i in range(n_read)
-                    },
-                    dtype=object,
+                yield pa.RecordBatch.from_arrays(
+                    [
+                        pa.array([r[i] for r in rows], type=pa.string())
+                        for i in range(width)
+                    ],
+                    names=names,
                 )
 
-    return meta.mapInPandas(parse, schema=out_schema), header_names
-
-
-def _split_line_first(path: str, cfg: CSVConfig, spark=None) -> list[str]:
-    with _decompress_open(path, spark) as f:
-        raw = f.read(1 << 20)
-    if len(raw) == 1 << 20:
-        raw = raw[:-3]
-    text = decode_file_bytes(raw, cfg.character_set, path)
-    return _split_line(io.StringIO(text).readline().rstrip("\r\n"), cfg)
+    return meta.mapInArrow(
+        parse,
+        schema=T.StructType([T.StructField(c, T.StringType(), True) for c in names]),
+    )
 
 
 def group_files_by_header(

@@ -3,19 +3,28 @@
 
 Files are `INSERT INTO tbl [(cols)] VALUES (...),(...);` dumps. No Spark
 reader exists for this, so it's the one place we drop to Python on the
-executors — but Spark-first in shape:
+executors — but Spark-first in shape. `read_sql_groups` is the entry: it
+takes a table's dump files and its charset, makes each file readable
+(spool, transcode, lz4; its docstring), groups the files by column list,
+locality and charset, and hands each group to one of three readers:
 
-    driver: split files into statement-aligned byte ranges
-      -> DataFrame of (path, start, end, rowid_base), 1 task per range
-      -> mapInPandas(seek + read range + parse)           # Arrow-batched
+    local  (read_sql_files): driver splits files into statement-aligned
+      byte ranges -> DataFrame of (path, start, end, chunk_base), one
+      task per range -> mapInArrow(seek + read range + parse)
+    remote (read_sql_files_remote): Spark's binaryFile source, one whole
+      file per task -> mapInArrow(parse the shipped content)
+    ranged (_read_sql_file_ranged, remote utf-8 files over
+      REMOTE_SQL_MAX_BYTES): Hadoop TextInputFormat splits on `;\\n`,
+      one record per statement -> mapInArrow(parse)
 
-The pre-split mirrors the reference's chunk machinery (ReadChunks
-parser.go:538-571, region splitting region.go:131-234): a multi-GiB dump
-becomes many bounded tasks instead of one whole-file task, and each
-chunk's row-id range is pre-allocated from its byte offset exactly like
-Chunk{PrevRowIDMax}. Executors open source paths directly (local FS /
-fuse mounts); remote object stores should mount or pre-stage, or extend
-`parse_batches` with an fsspec opener.
+Each face binds its RecordBatch columns by name and feeds the same
+parse kernel, `_row_batches`. The pre-split mirrors the reference's
+chunk machinery (ReadChunks parser.go:538-571, region splitting
+region.go:131-234): a multi-GiB dump becomes many bounded tasks instead
+of one whole-file task, and each chunk's row-id range is pre-allocated
+from its byte offset exactly like Chunk{PrevRowIDMax}. Executors open
+local paths directly (local FS / fuse mounts) and remote ones through
+the Hadoop connector Spark scans with.
 
 Value domain mirrors parser.go:468-518: every scalar is emitted as a
 STRING datum (typing happens at cast time, like the CSV path):
@@ -24,8 +33,9 @@ STRING datum (typing happens at cast time, like the CSV path):
   X'..'/0x.. hex -> latin-1-decoded byte string (byte-preserving),
   b'..'/0b.. bit -> decimal integer string.
 
-A `_row_seq` column (0-based row index within the file) rides along for
-deterministic row-id assignment (SURVEY.md §2.D1).
+A `_row_seq` column (the file's row-id base + the chunk's base + the
+row's index in the chunk) rides along for deterministic row-id
+assignment (SURVEY.md §2.D1).
 
 The statement column list (if any) is read driver-side via `peek_columns`
 — mydumper emits one form per file; the executor parser asserts
@@ -34,6 +44,7 @@ consistency and fails the task on mixed forms.
 
 from __future__ import annotations
 
+import codecs
 import io as _io
 import os
 from collections.abc import Iterator
@@ -42,6 +53,9 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from tidb_lightning_spark.paths import is_remote
+from tidb_lightning_spark.sources import csv_source
 
 
 class SQLDumpError(ValueError):
@@ -518,11 +532,9 @@ def peek_columns(
     (pass `spark`). The read window starts small and grows until one
     complete statement HEADER parses — immune to first statements longer
     than the window."""
-    from tidb_lightning_spark.sources.csv_source import _decompress_open
-
     size = 1 << 16
     while True:
-        with _decompress_open(path, spark=spark) as f:
+        with csv_source._decompress_open(path, spark=spark) as f:
             head = f.read(size)
         complete = len(head) < size
         text = _peek_decode(head, encoding)
@@ -561,11 +573,9 @@ def peek_arity(
     (the reference reads names from the target database there,
     restore.go no-schema path; without one we synthesize c0..cN).
     Same growing-window contract as peek_columns."""
-    from tidb_lightning_spark.sources.csv_source import _decompress_open
-
     size = 1 << 16
     while True:
-        with _decompress_open(path, spark=spark) as f:
+        with csv_source._decompress_open(path, spark=spark) as f:
             head = f.read(size)
         complete = len(head) < size
         text = _peek_decode(head, encoding)
@@ -625,10 +635,8 @@ def decompressed_size(path: str) -> int:
         return os.path.getsize(path)
     import hashlib
 
-    from tidb_lightning_spark.sources.csv_source import user_cache_dir
-
     st = os.stat(path)
-    cache_dir = user_cache_dir("tls_dsize")
+    cache_dir = csv_source.user_cache_dir("tls_dsize")
     key = hashlib.md5(
         f"{os.path.abspath(path)}:{st.st_size}:{st.st_mtime_ns}".encode()
     ).hexdigest()[:16]
@@ -636,10 +644,8 @@ def decompressed_size(path: str) -> int:
     if os.path.exists(marker):
         with open(marker) as f:
             return int(f.read())
-    from tidb_lightning_spark.sources.csv_source import _decompress_open
-
     n = 0
-    with _decompress_open(path) as f:
+    with csv_source._decompress_open(path) as f:
         while True:
             b = f.read(8 << 20)
             if not b:
@@ -759,24 +765,20 @@ def read_sql_files(
     ).repartition(max(len(ranges), 1))
 
     def parse_batches(batches):
-        for rb in batches:  # pyarrow.RecordBatch of (path,start,end,base)
+        for rb in batches:
             for path, start, end, cbase in zip(
-                rb.column(0).to_pylist(), rb.column(1).to_pylist(),
-                rb.column(2).to_pylist(), rb.column(3).to_pylist(),
+                *(rb.column(c).to_pylist()
+                  for c in ("path", "start", "end", "chunk_base"))
             ):
                 if _is_compressed(path):
-                    from tidb_lightning_spark.sources.csv_source import (
-                        _decompress_open,
-                    )
-
-                    with _decompress_open(path) as f:
+                    with csv_source._decompress_open(path) as f:
                         data = f.read()
                 else:
                     with open(path, "rb") as f:
-                        f.seek(int(start))
-                        data = f.read(int(end) - int(start))
+                        f.seek(start)
+                        data = f.read(end - start)
                 content = data.decode(encoding, errors="replace")
-                yield from _row_batches(content, n_columns, int(cbase), path)
+                yield from _row_batches(content, n_columns, cbase, path)
 
     # mapInArrow, not mapInPandas: tier-0 already produces an Arrow
     # table, and the pandas hop converted every string cell to a Python
@@ -946,11 +948,17 @@ def _vector_rows_table(content: str, n_columns: int):
 
 
 def _row_batches(content: str, n_columns: int, base: int, src: str):
-    """Parse one chunk into pyarrow RecordBatches (the mapInArrow face
-    of _row_frames). Tier 0's Arrow table is sliced and shipped AS IS —
-    zero pandas materialization; the scanner tiers build their bounded
-    row buffers in Python as before and convert once, directly to
-    Arrow."""
+    """Parse one chunk's statement text into pyarrow RecordBatches of
+    the `_rows_schema` shape: the parse kernel behind every reader's
+    mapInArrow face. `_row_seq` counts from `base`; `_src_file` is
+    `src`.
+
+    Tier 0 (_vector_rows_table) parses the whole chunk C-side and its
+    Arrow table is sliced and shipped as is. The scanner tier below
+    yields bounded slices instead of one chunk-sized batch: the Arrow
+    stream ships each slice to the JVM while Python keeps parsing, so
+    the cast/persist work OVERLAPS the parse instead of serializing
+    after it — and peak memory is a slice, not the whole chunk."""
     import numpy as np
     import pyarrow as pa
 
@@ -989,6 +997,9 @@ def _row_batches(content: str, n_columns: int, base: int, src: str):
         for row in stmt.rows:
             if len(row) != n_columns:
                 if len(row) == 0:
+                    # MySQL: `VALUES ()` is legal at ANY arity and means
+                    # every column takes its DEFAULT (reference golden
+                    # tests/default-columns)
                     row = [DEFAULT_SENTINEL] * n_columns
                 else:
                     raise SQLDumpError(
@@ -1002,59 +1013,6 @@ def _row_batches(content: str, n_columns: int, base: int, src: str):
             buf = []
     if buf:
         yield flush(buf)
-
-
-def _row_frames(content: str, n_columns: int, base: int, src: str):
-    """Parse one chunk's statement text into bounded pandas frames.
-
-    Tier 0 (_vector_rows_table) parses the whole chunk C-side and yields
-    Arrow-native slices. The scanner tiers below yield in bounded slices
-    instead of one chunk-sized frame: the Arrow stream ships each slice
-    to the JVM while Python keeps parsing, so the cast/persist work
-    OVERLAPS the parse instead of serializing after it — and peak memory
-    is a slice, not the whole chunk."""
-    import numpy as np
-    import pandas as pd
-
-    vec = _vector_rows_table(content, n_columns)
-    if vec is not None:
-        for off in range(0, vec.num_rows, 16384):
-            sl = vec.slice(off, 16384)
-            pdf = sl.to_pandas()
-            pdf["_row_seq"] = np.arange(
-                base + off, base + off + sl.num_rows, dtype="int64"
-            )
-            pdf["_src_file"] = src
-            yield pdf
-        return
-
-    all_names = [f"_c{i}" for i in range(n_columns)] + [
-        "_row_seq", "_src_file",
-    ]
-    seq = base
-    buf: list[list] = []
-    from tidb_lightning_spark.operators.transform import DEFAULT_SENTINEL
-
-    for stmt in parse_insert_statements(content):
-        for row in stmt.rows:
-            if len(row) != n_columns:
-                if len(row) == 0:
-                    # MySQL: `VALUES ()` is legal at ANY arity and means
-                    # every column takes its DEFAULT (reference golden
-                    # tests/default-columns)
-                    row = [DEFAULT_SENTINEL] * n_columns
-                else:
-                    raise SQLDumpError(
-                        f"row arity {len(row)} != expected {n_columns} "
-                        f"in {src}"
-                    )
-            buf.append(row + [seq, src])
-            seq += 1
-        if len(buf) >= 16384:
-            yield pd.DataFrame(buf, columns=all_names)
-            buf = []
-    if buf:
-        yield pd.DataFrame(buf, columns=all_names)
 
 
 # binaryFile ships a file's bytes as ONE Arrow cell; Spark caps a single
@@ -1109,12 +1067,12 @@ def _read_sql_file_ranged(
     def parse_batches(batches):
         for rb in batches:
             for off, stmt in zip(
-                rb.column(0).to_pylist(), rb.column(1).to_pylist()
+                rb.column("_off").to_pylist(), rb.column("_stmt").to_pylist()
             ):
                 # the delimiter strips the terminating ';' — the scanner
                 # treats it as optional at EOF, so no re-append needed
                 yield from _row_batches(
-                    stmt, n_columns, base + int(off) // divisor, path
+                    stmt, n_columns, base + off // divisor, path
                 )
 
     # mapInArrow for the same reason as read_sql_files: tier-0 output is
@@ -1157,7 +1115,7 @@ def read_sql_files_remote(
         (r["path"], r["length"]) for r in bdf.select("path", "length").collect()
     )
     big = [(p, n) for p, n in files if n > REMOTE_SQL_MAX_BYTES]
-    if big and encoding.lower().replace("-", "") not in ("utf8", "ascii"):
+    if big and codecs.lookup(encoding).name not in csv_source.UTF8_CHARSETS:
         raise SQLDumpError(
             f"remote SQL dump file(s) in charset {encoding!r} exceed "
             f"{REMOTE_SQL_MAX_BYTES >> 20} MiB and would not fit a "
@@ -1177,16 +1135,13 @@ def read_sql_files_remote(
 
     def parse_batches(batches):
         for rb in batches:
-            paths_col = rb.column(0)
-            content_col = rb.column(1)
-            for i in range(rb.num_rows):
-                # decode straight off the Arrow binary buffer view —
-                # same zero-intermediate-copy property the old
-                # str(buffer, enc) form had on the pandas path
+            content_col = rb.column("content")
+            for i, path in enumerate(rb.column("path").to_pylist()):
+                # decode straight off the Arrow binary buffer view — no
+                # intermediate bytes copy of the file
                 text = str(
                     content_col[i].as_buffer(), encoding, "replace"
                 )
-                path = paths_col[i].as_py()
                 yield from _row_batches(text, n_columns, bases[path], path)
 
     parts: list[DataFrame] = []
@@ -1207,3 +1162,95 @@ def read_sql_files_remote(
     for extra in parts[1:]:
         out = out.unionByName(extra)
     return out, reserved
+
+
+def read_sql_groups(
+    spark: SparkSession,
+    files: list[tuple[str, int]],
+    charset: str,
+    n_columns: int,
+) -> list[tuple[DataFrame, list[str] | None, int]]:
+    """A table's SQL dump files, as `(path, listed size)` pairs, -> its
+    scan groups `(df, file_columns, reserved)`: the one SQL-dump entry.
+
+    Files sharing a column list (`file_columns`; None = positional,
+    `n_columns` wide), a locality and a decode charset are one group
+    and one DataFrame of the `read_sql_files` shape. Its `_row_seq`
+    holds the group's row ids from 0 (per-file bases, region.go:252-
+    286, sized with the group's arity), and `reserved` is how many ids
+    the group takes.
+
+    `charset` is the configured character-set, resolved per file
+    ('auto' detects utf-8 then gb18030, reference reader.go:43-55;
+    remote detection is one bounded ranged read). Remote files are read
+    where they are (`read_sql_files_remote`, which decodes the charset
+    in the executor) unless the remote readers cannot take them; those
+    are SPOOLED to the local cache (one driver stream per file — the
+    reference's own per-file reader pass, mydump/reader.go:39-118,
+    140-179) and read as local files:
+      - compressed dumps (row-id reservation needs the DECOMPRESSED
+        size, and compressed streams aren't range-splittable anyway);
+      - legacy-charset dumps past REMOTE_SQL_MAX_BYTES (the ranged
+        reader's Hadoop Text decode is utf-8-only).
+    Local files are made plain utf-8 on the driver first, the CSV
+    reader's contract (reader.go:39-69): legacy charsets are
+    stream-transcoded, and lz4 frames decompressed (no JVM codec reads
+    them, and the range splitter wants seekable plain text)."""
+    sizes = dict(files)
+    remote = {p for p in sizes if is_remote(p)}
+
+    def resolve(path: str, peek_remote: bool) -> str:
+        return csv_source.effective_charset(
+            path, charset, spark if peek_remote else None
+        )
+
+    spool = sorted(p for p in remote if _is_compressed(p))
+    # uncompressed files resolve now (drives the over-cap spool
+    # decision); spooled ones resolve on their local copies below
+    eff = {p: resolve(p, p in remote) for p in sizes if p not in spool}
+    spool += sorted(
+        p for p in remote - set(spool)
+        if eff[p] not in csv_source.UTF8_CHARSETS
+        and sizes[p] > REMOTE_SQL_MAX_BYTES
+    )
+    actual = {p: p for p in sizes}
+    if spool:
+        actual.update(zip(spool, csv_source.spool_remote_to_local(spool, spark)))
+        remote -= set(spool)
+        for p in spool:
+            eff[p] = resolve(actual[p], False)
+    local = [p for p in sizes if p not in remote]
+    legacy = [p for p in local if eff[p] not in csv_source.UTF8_CHARSETS]
+    if legacy:
+        # per-file resolved charsets may differ under 'auto': the
+        # transcode resolves each file again
+        actual.update(zip(legacy, csv_source.transcode_to_utf8(
+            [actual[p] for p in legacy], charset
+        )))
+    actual.update(zip(local, csv_source.materialize_lz4(
+        [actual[p] for p in local]
+    )))
+
+    groups: dict[tuple, list[str]] = {}
+    for p in sizes:
+        # a remote group shares a charset too: the ranged reader decodes
+        # one encoding per scan
+        enc = eff[p] if p in remote else "utf-8"
+        cols = peek_columns(
+            actual[p], enc, spark=spark if p in remote else None
+        )
+        groups.setdefault((tuple(cols or ()), p in remote, enc), []).append(p)
+    out = []
+    for (cols, in_remote, enc), paths in groups.items():
+        n = len(cols) or n_columns
+        if in_remote:
+            df, reserved = read_sql_files_remote(spark, paths, n, enc)
+        else:
+            bases, reserved = file_bases(
+                [decompressed_size(actual[p]) for p in paths], n
+            )
+            df = read_sql_files(
+                spark, [actual[p] for p in paths], n, "utf-8", bases=bases
+            )
+        out.append((df, list(cols) or None, reserved))
+    return out
